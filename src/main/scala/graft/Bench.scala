@@ -520,14 +520,7 @@ object Bench {
     System.setProperty("graft.canon.sort", "false")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tune.localSession(cpus.toInt, "WARN")
     // Scale-derived shuffle width (see Tune): at sf0.1 this resolves to
     // the core-count floor (identical to the historical fixed 32), at
     // the replica decades it grows with the data — the policy change

@@ -289,14 +289,7 @@ object Scaling {
     }
     require(dirs.size >= 2, "need a baseline dir and at least one scaled dir")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tune.localSession(cpus.toInt, "WARN")
 
     val only = sys.env.get("SPARK_GRAFT_SCALING_QUERIES")
       .map(_.split(",").map(_.trim).toSet)

@@ -43,6 +43,23 @@ import org.apache.spark.sql.SparkSession
   */
 object Tune {
 
+  /** The local session every main runs on: `local[cpus]` with the
+    * shuffle width at the core count (callers that measure at scale
+    * re-derive it with [[applyShuffleWidth]]), UTC, raw-long NANOS
+    * timestamps (the `Tables` loaders normalize them) and no UI.
+    */
+  def localSession(cpus: Int, logLevel: String = "ERROR"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Total on-disk bytes under `dir` (recursive; the fixture layout is
     * one parquet file/dir per table). One filesystem metadata call —
     * the same `getContentSummary` probe compactSmallFiles uses.

@@ -20,25 +20,6 @@ import graft.functions.Text
   */
 object Dedup {
 
-  /** Checkpoint selector for the minhash-family shared frames (r17).
-    * The r16 round materialized THREE frames per query (banded, candidate
-    * pairs, verify shingle sets) and the driver's cold-JVM bench showed
-    * the eager materializations cost more than the recompute they save on
-    * d2/d6/d7 (r16 verdict #1). Keys: 'b' = the banded frame (the 128-hash
-    * signature kernel's output — the dominant CPU, consumed by both
-    * self-join sides), 'c' = the candidate pairs (consumed by the id-set
-    * union twice + the verify join), 'v' = the candidate-doc shingle sets
-    * (consumed by both verify sides). The default is the r17-measured
-    * winner; the property exists so tools/DedupCkptBench can A/B the
-    * variants through the REAL query paths in one session — it is a
-    * measurement aid, not a tuning surface (the default IS the shipped
-    * shape at every scale; all variants compute identical results).
-    */
-  private def ckptIf(key: String, df: DataFrame): DataFrame =
-    if (sys.props.getOrElse("graft.dedup.ckpt", "bcv").contains(key))
-      df.localCheckpoint()
-    else df
-
   /** doc_id + distinct word-n-gram shingle set. Shingling (and everything
     * stacked on it — minhash signatures, band hashes) is the per-row
     * compute cost of the whole dedup family, so spread the input across
@@ -135,8 +116,11 @@ object Dedup {
     // over the corpus (the dominant CPU of the d2/d6/d7/d8/d10 family;
     // AQE broadcast one side at sf0.1 so no exchange was ever reused).
     // The materialized frame is docs × bands × ~24 B — the same volume
-    // the bucket join must move anyway.
-    val banded = ckptIf("b", bandFrame(sf, numHashes, bands))
+    // the bucket join must move anyway. This checkpoint and the two in
+    // minhashNearDup were A/B'd as every subset, interleaved through the
+    // declared d2/d6/d7/d8/d10/d14 queries: all three together won in
+    // every JVM state (OPTIMIZATION_r17.md item 1).
+    val banded = bandFrame(sf, numHashes, bands).localCheckpoint()
     val bounded = maxBucket match {
       case Some(cap) =>
         // one aggregate over the banded keys, then a semi-join keeps only
@@ -185,11 +169,12 @@ object Dedup {
     // minhashCandidates) plus the candidate subset twice. Set values
     // per doc are unchanged, so verified pairs and Jaccards are
     // identical.
-    val cands = ckptIf("c", minhashCandidates(sf, numHashes, bands))
+    val cands = minhashCandidates(sf, numHashes, bands).localCheckpoint()
     val candIds = cands.select(col("doc_a").as("doc_id"))
       .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-    val vs = ckptIf("v", // consumed twice (doc_a / doc_b sides)
-      shingleFrame(docs.join(candIds, Seq("doc_id"), "left_semi"), n))
+    val vs = // consumed twice (doc_a / doc_b sides)
+      shingleFrame(docs.join(candIds, Seq("doc_id"), "left_semi"), n)
+        .localCheckpoint()
     cands
       .join(vs.select(col("doc_id").as("doc_a"), col("sh").as("sa")), "doc_a")
       .join(vs.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
@@ -688,7 +673,20 @@ object Dedup {
     */
   def substringRuns(docs: DataFrame, k: Int, minRun: Int,
                     maxDocsPerGram: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val grams = positionalGrams(docs, k)
+    val bounded = maxDocsPerGram match {
+      case Some(cap) =>
+        val ok = grams.groupBy(col("gh"))
+          .agg(countDistinct(col("doc_id")).as("nd"))
+          .filter(col("nd") <= cap).select(col("gh"))
+        grams.join(ok, Seq("gh"), "left_semi")
+      case None => grams
+    }
+    runsFromGrams(bounded, k, minRun)
+  }
+
+  /** [[substringRuns]]' positional `k`-gram rows `(doc_id, pos, gh)`. */
+  private[graft] def positionalGrams(docs: DataFrame, k: Int): DataFrame =
     // fused gram hashing (r15): posexplode(shingles) + xxhash64(gram)
     // materialized ~2G shingle STRINGS at the 1000× decade, each built,
     // UTF-16→UTF-8 encoded, hashed, and discarded — the decade marginal
@@ -701,22 +699,22 @@ object Dedup {
     // kernel per row (the cdcChunks/t9 gotcha); short docs DO produce
     // empty gram arrays here, so the outer form emits one null row for
     // them and the isNotNull filter drops it after the explode.
-    val grams = spreadPartitions(docs)
+    spreadPartitions(docs)
       .select(col("doc_id"),
         posexplode_outer(
           graft.plans.Expressions.shingleHashes(col("text"), k)))
       .select(col("doc_id"), col("pos"), col("col").as("gh"))
       .filter(col("gh").isNotNull)
-    val bounded = maxDocsPerGram match {
-      case Some(cap) =>
-        val ok = grams.groupBy(col("gh"))
-          .agg(countDistinct(col("doc_id")).as("nd"))
-          .filter(col("nd") <= cap).select(col("gh"))
-        grams.join(ok, Seq("gh"), "left_semi")
-      case None => grams
-    }
-    val m = bounded.as("a")
-      .join(bounded.as("b"),
+
+  /** [[substringRuns]]' gram self-join and run detection over a gram
+    * frame shaped like [[positionalGrams]]' — split out so a filtered
+    * gram frame can feed it unchanged (graft.tools.Ab's d17 variants).
+    */
+  private[graft] def runsFromGrams(grams: DataFrame, k: Int,
+                                   minRun: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val m = grams.as("a")
+      .join(grams.as("b"),
         col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.pos").as("pa"),

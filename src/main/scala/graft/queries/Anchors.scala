@@ -16,14 +16,14 @@ import graft.functions.Core._
 object Anchors {
   private type Q = (SparkSession, String) => DataFrame
 
-  /** The b17/b19 fact-prefilter form, factored (r17 session 2 for b9):
-    * drop `big` rows whose `bigKey` cannot match any of `keys` — a
-    * broadcast LEFT SEMI while the key set fits the broadcast bound,
-    * the 10-bits/key bloom filter past it (flat driver memory at the
-    * 100 TB design point; false positives just ride through to the
-    * inner join that drops them). Callers gate the CALL on a
-    * metadata-cheap scale probe so the below-gate plan stays the
-    * pre-r17 shape.
+  /** The b9/b17/b19 fact prefilter: drop `big` rows whose `bigKey`
+    * cannot match any of `keys` — a broadcast LEFT SEMI while the key
+    * set fits the broadcast bound, the 10-bits/key bloom filter past it
+    * (flat driver memory at the 100 TB design point; false positives
+    * just ride through to the inner join that drops them). b9 and b17
+    * gate the CALL on a metadata-cheap scale probe so the below-gate
+    * plan stays the pre-r17 shape; b19 prefilters at every scale. b5
+    * keeps its own bloom-only form (see its comment).
     */
   private def prefilterByKeys(big: DataFrame, bigKey: org.apache.spark.sql
       .Column, keys: DataFrame): DataFrame = {
@@ -140,19 +140,21 @@ object Anchors {
       val from = to_timestamp(lit("1996-01-01 00:00:00"))
       val until = to_timestamp(lit("1997-01-01 00:00:00"))
       // r17 session 2: the b17-style gated fact prefilter, thresholds
-      // from b5's OWN interleaved decade table (tools/B5Bench — old /
-      // semi / bloom): 10× old 1.55 / 1.60 / 1.99; 100× 44.8 / 23.3 /
-      // 12.9; 1000× 82.0 / 21.6 / 17.9. The bloom form wins BOTH big
-      // decades (3.5× / 4.6× — unlike b17, where semi won: b5's
-      // one-year ASIA key set is ~4× smaller, so the bitset probe
-      // beats the broadcast hash build), the prefilter loses at 10×,
-      // so the gate is 5M orders (geometric middle of 1.5M loses /
+      // from b5's OWN interleaved decade table (OPTIMIZATION_r17.md
+      // item 14 — old / semi / bloom): 10× old 1.55 / 1.60 / 1.99; 100×
+      // 44.8 / 23.3 / 12.9; 1000× 82.0 / 21.6 / 17.9. The bloom form
+      // wins BOTH big decades (3.5× / 4.6× — unlike b17, where semi
+      // won: b5's one-year ASIA key set is ~4× smaller, so the bitset
+      // probe beats the broadcast hash build), the prefilter loses at
+      // 10×, so the gate is 5M orders (geometric middle of 1.5M loses /
       // 15M wins). Bits are 10/key off the exact key count; past 2e9
-      // keys (a 2.5 GB bitset — beyond any measured regime and beyond
-      // a sane broadcast) the gate falls back to the plain join rather
-      // than ship an untested shape. The prefilter only removes rows
-      // the inner join drops — result identical on every path
-      // (oracle-pinned).
+      // keys (a 2.5 GB bitset — beyond any measured regime and beyond a
+      // sane broadcast) the gate falls back to the plain join rather
+      // than ship an untested shape. Hence no prefilterByKeys here: its
+      // semi-below-30M-keys switch would pick the semi form at every
+      // measured decade, and that table has semi losing to bloom (21.6
+      // vs 17.9 s at 1000×). The prefilter only removes rows the inner
+      // join drops — result identical on every path (oracle-pinned).
       val prunedOrders = Tables.region(s, d).filter(col("r_name") === "ASIA")
         .join(Tables.nation(s, d),
           col("r_regionkey") === col("n_regionkey"))
@@ -278,16 +280,16 @@ object Anchors {
       // is prefiltered by the two-nation SUPPLIER keys and orders by
       // the two-nation CUSTOMER keys (broadcast semi / bloom via
       // prefilterByKeys) before the fact⋈orders exchange moves either.
-      // Measured interleaved (tools/B9Bench, old/semi/bloom): 10× 2.00
-      // / 1.75 / 2.09; 100× 19.1 / 17.7 / 16.9; 1000× 245.7 / 7.6 /
-      // 7.7 — the ungated fact⋈orders shuffle hits the spill wall at
-      // the 1000× decade (guide §2.2: superlinear 12.9× growth for 10×
-      // data) and the prefilters collapse both exchange sides ~12×,
-      // a 32× win there; below 50M orders the deltas are inside host
-      // dispersion, so the gate keeps the pre-r17 plan unchanged.
-      // Necessary conditions only — every dropped row fails the final
-      // pair filter — so the result is identical on every path
-      // (oracle-pinned).
+      // Measured interleaved (OPTIMIZATION_r17.md item 14,
+      // old/semi/bloom): 10× 2.00 / 1.75 / 2.09; 100× 19.1 / 17.7 /
+      // 16.9; 1000× 245.7 / 7.6 / 7.7 — the ungated fact⋈orders shuffle
+      // hits the spill wall at the 1000× decade (guide §2.2:
+      // superlinear 12.9× growth for 10× data) and the prefilters
+      // collapse both exchange sides ~12×, a 32× win there; below 50M
+      // orders the deltas are inside host dispersion, so the gate keeps
+      // the pre-r17 plan unchanged. Necessary conditions only — every
+      // dropped row fails the final pair filter — so the result is
+      // identical on every path (oracle-pinned).
       val twoNations = Seq("NATION_1", "NATION_2")
       val big = Tables.orders(s, d).select(count(lit(1))).head()
         .getLong(0) >= 50_000_000L
@@ -511,17 +513,17 @@ object Anchors {
     // join, so at the big decades a broadcast LEFT SEMI against the
     // pruned DISTINCT orderkeys drops the non-matching fact rows
     // map-side BEFORE the fact exchange — measured interleaved
-    // (tools/B17Bench): 36.7 → 19.0 s at 1000× (1.93×); at 100× the
-    // same prefilter LOSES (10.1 → 12.8 s — the pruned chain scanned
-    // twice costs more than the saved fact shuffle). The gate is one
-    // metadata-cheap orders count with the threshold (50M orders) at
-    // the measured crossover's geometric middle (15M loses, 150M wins)
-    // — data-derived, not a core-count constant. Past the
-    // broadcast-safe key volume the prefilter becomes the bloom form
-    // (10 bits/key, b19/d12 machinery; measured within 9 % of semi at
-    // 1000×, and the only shape whose driver memory is flat at 100 TB).
-    // Either prefilter only removes rows the inner join drops, so the
-    // result is identical on every path (oracle-pinned).
+    // (OPTIMIZATION_r17.md item 11): 36.7 → 19.0 s at 1000× (1.93×); at
+    // 100× the same prefilter LOSES (10.1 → 12.8 s — the pruned chain
+    // scanned twice costs more than the saved fact shuffle). The gate
+    // is one metadata-cheap orders count with the threshold (50M
+    // orders) at the measured crossover's geometric middle (15M loses,
+    // 150M wins) — data-derived, not a core-count constant. Past the
+    // broadcast-safe key volume prefilterByKeys switches to the bloom
+    // form (10 bits/key, the d12 machinery; measured within 9 % of semi
+    // at 1000×, and the only shape whose driver memory is flat at 100
+    // TB). Either prefilter only removes rows the inner join drops, so
+    // the result is identical on every path (oracle-pinned).
     "b17_tpch_q8" -> { (s, d) =>
       val from = to_timestamp(lit("1996-01-01 00:00:00"))
       val until = to_timestamp(lit("1998-01-01 00:00:00"))
@@ -541,22 +543,8 @@ object Anchors {
         if (Tables.orders(s, d).select(count(lit(1))).head().getLong(0)
             < 50_000_000L)
           Tables.lineitem(s, d)
-        else {
-          val keys = prunedOrders.select(col("o_orderkey")).distinct()
-          val nk = keys.count()
-          if (nk <= 30_000_000L)
-            Tables.lineitem(s, d).join(
-              broadcast(keys.select(col("o_orderkey").as("pk"))),
-              col("l_orderkey") === col("pk"), "left_semi")
-          else {
-            val bloom = keys.agg(graft.plans.Expressions
-              .bloomFilterAgg(xxhash64(col("o_orderkey")), nk,
-                math.max(16384L, 10L * nk)).as("bf"))
-              .scalar()
-            Tables.lineitem(s, d).filter(graft.plans.Expressions
-              .mightContain(bloom, xxhash64(col("l_orderkey"))))
-          }
-        }
+        else prefilterByKeys(Tables.lineitem(s, d), col("l_orderkey"),
+          prunedOrders.select(col("o_orderkey")).distinct())
       prunedOrders
         .join(fact, col("o_orderkey") === col("l_orderkey"))
         .join(Tables.supplier(s, d),
@@ -628,32 +616,20 @@ object Anchors {
         .filter(col("p_name").contains("red")).select(col("p_partkey"))
       val ps = Tables.partsupp(s, d)
         .join(redKeys, col("p_partkey") === col("ps_partkey"))
-      // (r15, tools/Q9Audit) the fact⋈partsupp two-key join was 44-53 s
-      // of b19's ~54 s at 1000× — ALL of lineitem (600M rows, ~30 GB)
-      // shuffled into it while only ~13% survive the red-part slice.
-      // A broadcast LEFT SEMI against the red part KEYS (1M longs ≈
-      // 8 MB at 1000×) drops the non-matching 87% map-side, BEFORE the
-      // fact ever exchanges. The broadcast hint is GUARDED by a key
-      // count (a map-side-combined scalar agg): past the
-      // shuffle-feasible broadcast size the same prefilter becomes a
-      // bloom runtime filter sized at ~10 bits/key (the d12/d13
-      // decontamination machinery). Either form only removes rows the
-      // inner join would drop — bloom false positives just ride through
-      // to the exact two-key join — so the result is identical.
-      val nRed = redKeys.count()
-      val fact =
-        if (nRed <= 30_000_000L)
-          Tables.lineitem(s, d).join(broadcast(redKeys),
-            col("p_partkey") === col("l_partkey"), "left_semi")
-        else {
-          val bloom = redKeys.agg(graft.plans.Expressions
-            .bloomFilterAgg(xxhash64(col("p_partkey")), nRed,
-              math.max(16384L, 10L * nRed)).as("bf"))
-            .scalar()
-          Tables.lineitem(s, d).filter(graft.plans.Expressions
-            .mightContain(bloom, xxhash64(col("l_partkey"))))
-        }
-      fact
+      // (r15 Q9 stage audit, PLANS.md) the fact⋈partsupp two-key join
+      // was 44-53 s of b19's ~54 s at 1000× — ALL of lineitem (600M
+      // rows, ~30 GB) shuffled into it while only ~13% survive the
+      // red-part slice. A broadcast LEFT SEMI against the red part KEYS
+      // (1M longs ≈ 8 MB at 1000×) drops the non-matching 87% map-side,
+      // BEFORE the fact ever exchanges. prefilterByKeys GUARDS the
+      // broadcast with a key count (a map-side-combined scalar agg):
+      // past the shuffle-feasible broadcast size the same prefilter
+      // becomes a bloom runtime filter sized at ~10 bits/key (the
+      // d12/d13 decontamination machinery). Either form only removes
+      // rows the inner join would drop — bloom false positives just
+      // ride through to the exact two-key join — so the result is
+      // identical.
+      prefilterByKeys(Tables.lineitem(s, d), col("l_partkey"), redKeys)
         .join(ps, col("ps_partkey") === col("l_partkey") &&
             col("ps_suppkey") === col("l_suppkey"))
         .join(Tables.supplier(s, d), col("s_suppkey") === col("l_suppkey"))

@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{SparkEntry, Tune}
 
 /** Formatted-plan dump for the optimization-round evidence files:
@@ -25,14 +23,7 @@ object ExplainDump {
     val names = if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tune.localSession(cpus.toInt)
     System.setProperty("graft.canon.sort", "false")
     Tune.applyShuffleWidth(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{SparkEntry, Tune}
 
 /** Physical-plan dump for PLANS.md: prints the optimized physical plan of
   * each named query (all queries if none given) at the given SF.
@@ -14,14 +12,7 @@ object PlanDoc {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tune.localSession(8)
     names.foreach { n =>
       println(s"==== $n ====")
       try println(SparkEntry.queries(n)(spark, sfDir)

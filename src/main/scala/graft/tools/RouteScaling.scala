@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Tables, Tune}
 import graft.operators.Similarity
 
 /** Per-batch ingest-assignment cost, flat vs two-level, across scale
@@ -37,14 +37,7 @@ object RouteScaling {
     }
     val batchTarget = sys.env.getOrElse("GRAFT_ROUTE_BATCH", "100000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tune.localSession(cpus.toInt)
 
     def timed(fn: => DataFrame): Double = {
       def once(): Double = {

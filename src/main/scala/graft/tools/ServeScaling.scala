@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Tables, Tune}
 import graft.operators.Similarity
 
 /** Packed-vs-long-form PQ serving cost across scale decades: at each
@@ -27,14 +27,7 @@ object ServeScaling {
       val Array(d, f) = a.split("="); (d, f.toDouble)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tune.localSession(cpus.toInt)
 
     def t(fn: () => Unit): Double = {
       val t0 = System.nanoTime(); fn(); (System.nanoTime() - t0) / 1e9

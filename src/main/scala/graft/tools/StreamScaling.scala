@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Tables, Tune}
 import graft.streaming.Streams
 
 /** Streaming-maintenance growth measurement (r10 verdict task #9): for
@@ -44,20 +44,13 @@ object StreamScaling {
         case None => (_: String) => true
       }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store: the deployment shape (StreamingSpec's
-      // parity suite runs both providers; growth curves use the one a
-      // cluster would)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tune.localSession(cpus.toInt)
+    // RocksDB state store: the deployment shape (StreamingSpec's parity
+    // suite runs both providers; growth curves use the one a cluster
+    // would). A session conf, read when each stream starts.
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
 
     def tmp(prefix: String): String =
       java.nio.file.Files.createTempDirectory(prefix).toString

@@ -220,6 +220,25 @@ class PlanLintSpec extends AnyFunSuite {
         s"collect_list, found $fpExchanges:\n$planStr")
   }
 
+  test("b19 prefilters lineitem with a LEFT SEMI on the red part keys " +
+      "before the fact joins") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // b19's prefilter is ungated (only ~13% of lineitem survives the
+    // red-part slice at every scale), so it must already be in the plan
+    // at the test fixture
+    val plan = SparkEntry.queries("b19_tpch_q9")(spark, sfDir)
+      .queryExecution.sparkPlan
+    val semiOverLineitem = plan.collect {
+      case j: BaseJoinExec if j.joinType == LeftSemi => j
+    }.exists(_.left.collect {
+      case f: FileSourceScanExec => f.output.map(_.name)
+    }.flatten.contains("l_partkey"))
+    assert(semiOverLineitem,
+      s"b19 lost its LeftSemi lineitem prefilter:\n$plan")
+  }
+
   test("j5's correlated scalar decorrelates to j4's aggregate + " +
       "left-outer join (no per-outer-row subquery survives)") {
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Canonical runner for long measurement mains (Scaling, tools/*Audit,
+# Canonical runner for long measurement mains (Scaling, tools/Ab,
 # tools/*Scaling, Recall) — the durable form of the recipe that r13-r15
 # re-learned piecemeal (r15 verdict #7):
 #
@@ -25,12 +25,16 @@
 #   * twin/variant comparisons (e.g. fixed-bits vs auto-bits graphs)
 #     must be measured INTERLEAVED IN ONE SESSION — r14's "2× gap"
 #     between d16 and its twin was host dispersion across sessions,
-#     falsified by tools/GraphAudit re-measuring both back-to-back;
+#     falsified by re-measuring both back-to-back; graft.tools.Ab is
+#     the harness for that (equality-gated, interleaved, one JSON line
+#     per spec);
 #   * merge results with tools/update_scaling.py (surgical, keeps
 #     history); merge_scaling.py REBUILDS and drops absent logs.
 #
 # Usage: tools/run_tool.sh <mainClass> [args...]
-#   e.g. tools/run_tool.sh graft.tools.CdcAudit /tmp/graftsf/sf10 /tmp/graftsf/sf100
+#   e.g. tools/run_tool.sh graft.tools.Ab /tmp/graftsf/sf10 2 \
+#          d17_substring_runs d17_substring_runs~win \
+#          b5_tpch_q5 b5_tpch_q5@spark.sql.shuffle.partitions=64
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN=$1; shift
