@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, TimestampType}
 
 /** Core column-expression library — the primitives every operator in
   * SURVEY.md §2 composes from. All of these are plain Catalyst expressions
@@ -165,24 +165,30 @@ object Core {
     if (df.rdd.getNumPartitions < 4 * par) df.repartition(par) else df
   }
 
-  /** Collect `max(ts) - sec` as a literal timestamp. The reference anchors
-    * sliding windows at `now()`; the batch twin anchors at max event time.
-    * Computing the anchor in-plan (crossJoin of an aggregate) makes the time
-    * predicate non-constant, so it can never prune parquet row groups — at
-    * 100 TB that is two full scans. One tiny driver-side job for the anchor
-    * turns the main-scan filter into a pushable constant instead.
-    * Microsecond precision is preserved (java.sql.Timestamp carries nanos).
+  /** `anchor - sec` as a timestamp literal. The reference anchors sliding
+    * windows at `now()`; the batch twin anchors at max event time. A
+    * literal, not an in-plan crossJoin of an aggregate: a non-constant
+    * time predicate can never prune parquet row groups — at 100 TB that
+    * is two full scans. Microsecond precision is preserved. Without an
+    * anchor (an empty table) the cutoff is a typed NULL, so `ts >= cut`
+    * keeps no row, as SQL's comparison with `max()` of no rows does.
+    */
+  def cutoff(anchor: Option[java.time.Instant], sec: Long): Column =
+    anchor.fold(lit(null).cast(TimestampType))(a => lit(a.minusSeconds(sec)))
+
+  /** [[cutoff]] anchored at `max(ts)` of a derived frame, collected by one
+    * driver-side aggregate job. Base tables answer their anchor from
+    * parquet footers without a job ([[graft.Tables.maxTs]]).
     */
   def anchorMinusSec(df: org.apache.spark.sql.DataFrame, ts: Column,
                      sec: Long): Column =
-    lit(anchorInstantMinusSec(df, ts, sec))
+    cutoff(Option(df.agg(max(ts)).head().getTimestamp(0)).map(_.toInstant),
+      sec)
 
-  /** Instant form of [[anchorMinusSec]] — for callers that re-read the
-    * source with the cutoff pushed into the scan (Tables.eventsFrom).
-    */
-  def anchorInstantMinusSec(df: org.apache.spark.sql.DataFrame, ts: Column,
-                            sec: Long): java.time.Instant =
-    df.agg(max(ts)).head().getTimestamp(0).toInstant.minusSeconds(sec)
+  /** A nullable BIGINT literal: a builder's collected scalar, NULL when
+    * its table is empty. */
+  def litOrNull(v: Option[Long]): Column =
+    v.fold(lit(null).cast(LongType))(lit(_))
 
   /** Whether [[CanonOps.canonOrder]] sorts. OFF by default since r12:
     * the r11 zz_order_probe entry emitted Spark-ASC vs oracle-DESC rows

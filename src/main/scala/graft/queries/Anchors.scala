@@ -21,9 +21,10 @@ object Anchors {
     * set fits the broadcast bound, the 10-bits/key bloom filter past it
     * (flat driver memory at the 100 TB design point; false positives
     * just ride through to the inner join that drops them). b9 and b17
-    * gate the CALL on a metadata-cheap scale probe so the below-gate
-    * plan stays the pre-r17 shape; b19 prefilters at every scale. b5
-    * keeps its own bloom-only form (see its comment).
+    * gate the CALL on the orders row count, read from the parquet
+    * footers (no job), so the below-gate plan stays the pre-r17 shape;
+    * b19 prefilters at every scale. b5 keeps its own bloom-only form (see
+    * its comment).
     */
   private def prefilterByKeys(big: DataFrame, bigKey: org.apache.spark.sql
       .Column, keys: DataFrame): DataFrame = {
@@ -147,13 +148,13 @@ object Anchors {
       // won: b5's one-year ASIA key set is ~4× smaller, so the bitset
       // probe beats the broadcast hash build), the prefilter loses at
       // 10×, so the gate is 5M orders (geometric middle of 1.5M loses /
-      // 15M wins). Bits are 10/key off the exact key count; past 2e9
-      // keys (a 2.5 GB bitset — beyond any measured regime and beyond a
-      // sane broadcast) the gate falls back to the plain join rather
-      // than ship an untested shape. Hence no prefilterByKeys here: its
-      // semi-below-30M-keys switch would pick the semi form at every
-      // measured decade, and that table has semi losing to bloom (21.6
-      // vs 17.9 s at 1000×). The prefilter only removes rows the inner
+      // 15M wins), counted from the parquet footers. Bits are 10/key off
+      // the exact key count; past 2e9 keys (a 2.5 GB bitset — beyond any
+      // measured regime and beyond a sane broadcast) the gate falls back
+      // to the plain join rather than ship an untested shape. Hence no
+      // prefilterByKeys here: its semi-below-30M-keys switch would pick
+      // the semi form at every measured decade, and that table has semi
+      // losing to bloom (21.6 vs 17.9 s at 1000×). The prefilter only removes rows the inner
       // join drops — result identical on every path (oracle-pinned).
       val prunedOrders = Tables.region(s, d).filter(col("r_name") === "ASIA")
         .join(Tables.nation(s, d),
@@ -164,8 +165,7 @@ object Anchors {
             .filter(col("o_orderdate") >= from && col("o_orderdate") < until),
           col("c_custkey") === col("o_custkey"))
       val fact =
-        if (Tables.orders(s, d).select(count(lit(1))).head().getLong(0)
-            < 5_000_000L)
+        if (Tables.rowCount(s, d, "orders") < 5_000_000L)
           Tables.lineitem(s, d)
         else {
           val keys = prunedOrders.select(col("o_orderkey")).distinct()
@@ -291,8 +291,7 @@ object Anchors {
       // dropped row fails the final pair filter — so the result is
       // identical on every path (oracle-pinned).
       val twoNations = Seq("NATION_1", "NATION_2")
-      val big = Tables.orders(s, d).select(count(lit(1))).head()
-        .getLong(0) >= 50_000_000L
+      val big = Tables.rowCount(s, d, "orders") >= 50_000_000L
       val fact0 = Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= from && col("l_shipdate") < until)
       val fact =
@@ -516,13 +515,13 @@ object Anchors {
     // (OPTIMIZATION_r17.md item 11): 36.7 → 19.0 s at 1000× (1.93×); at
     // 100× the same prefilter LOSES (10.1 → 12.8 s — the pruned chain
     // scanned twice costs more than the saved fact shuffle). The gate
-    // is one metadata-cheap orders count with the threshold (50M
-    // orders) at the measured crossover's geometric middle (15M loses,
-    // 150M wins) — data-derived, not a core-count constant. Past the
-    // broadcast-safe key volume prefilterByKeys switches to the bloom
-    // form (10 bits/key, the d12 machinery; measured within 9 % of semi
-    // at 1000×, and the only shape whose driver memory is flat at 100
-    // TB). Either prefilter only removes rows the inner join drops, so
+    // is the orders row count from the parquet footers (no job), with
+    // the threshold (50M orders) at the measured crossover's geometric
+    // middle (15M loses, 150M wins) — data-derived, not a core-count
+    // constant. Past the broadcast-safe key volume prefilterByKeys
+    // switches to the bloom form (10 bits/key, the d12 machinery;
+    // measured within 9 % of semi at 1000×, and the only shape whose
+    // driver memory is flat at 100 TB). Either prefilter only removes rows the inner join drops, so
     // the result is identical on every path (oracle-pinned).
     "b17_tpch_q8" -> { (s, d) =>
       val from = to_timestamp(lit("1996-01-01 00:00:00"))
@@ -540,8 +539,7 @@ object Anchors {
             .filter(col("o_orderdate") >= from && col("o_orderdate") < until),
           col("c_custkey") === col("o_custkey"))
       val fact =
-        if (Tables.orders(s, d).select(count(lit(1))).head().getLong(0)
-            < 50_000_000L)
+        if (Tables.rowCount(s, d, "orders") < 50_000_000L)
           Tables.lineitem(s, d)
         else prefilterByKeys(Tables.lineitem(s, d), col("l_orderkey"),
           prunedOrders.select(col("o_orderkey")).distinct())

@@ -155,8 +155,8 @@ object DomainQueries {
       // o_orderdate is normalized to session-zone (UTC) TimestampType by
       // Tables.orders whatever the parquet physical type; epoch matches
       // DuckDB's epoch() on the same instants.
-      val anchorSec = o.agg(max(col("o_orderdate"))).head()
-        .getTimestamp(0).toInstant.getEpochSecond
+      val anchorSec = litOrNull(Tables.maxTs(s, d, "orders", "o_orderdate")
+        .map(_.getEpochSecond))
       val firstSeen = o.groupBy(col("o_custkey"))
         .agg(min(col("o_orderdate")).as("first_seen"),
           count_if(col("o_totalprice") > 1000d).as("big_orders"))
@@ -171,7 +171,7 @@ object DomainQueries {
             holdersCount = (col("c_custkey") * 37) % 12000,
             fullyMinted = col("c_custkey") % 2 === 0,
             daysAlive = coalesce(
-              floor((lit(anchorSec)
+              floor((anchorSec
                 - unix_timestamp(col("first_seen").cast("timestamp")))
                 / 86400d).cast("double"),
               lit(0d))).cast("long").as("score"))
@@ -197,8 +197,8 @@ object DomainQueries {
       // total == |customer|: the matrix is built by LEFT joins off the
       // customer scan, so counting it would recompute the whole
       // aggregation chain just to learn the row count of its preserved
-      // side. Counting the base table reads parquet footers only.
-      val total = Tables.customer(s, d).count()
+      // side. The base table's row count is in its parquet footers.
+      val total = Tables.rowCount(s, d, "customer")
       m.withColumn("total", lit(total))
         .orderBy(col("mcap_zig").desc, col("token_id"))
         .limit(20)
@@ -233,17 +233,16 @@ object DomainQueries {
     // §3 serving composite #3: the GET /tokens/:id/ohlcv chart route
     // (api/routes/tokens.js:1244-1558): a from/to window over ONE
     // series, 1h candles resampled to the requested tf, fill=prev gap
-    // fill, newest `limit` bars. The 14-day cutoff collects to a literal
-    // and reaches the parquet scan through the raw-nanos pushdown path
-    // (Tables.eventsFrom) — at 100 TB the route reads days, not history.
+    // fill, newest `limit` bars. The 14-day cutoff is a footer-anchored
+    // literal and reaches the parquet scan through the raw-nanos pushdown
+    // path (Tables.eventsWithin) — at 100 TB the route reads days, not
+    // history.
     // The series key (pool_id, synthesized as user_id%4; the route's :id
     // selects pool 1) threads through candles → resample → gapFill so
     // the carry window PARTITIONS by series — the production per-pool
     // shape, never a single-partition window over all series.
     "api3_ohlcv_route" -> { (s, d) =>
-      val cut = anchorInstantMinusSec(Tables.events(s, d), col("ts"),
-        14L * 86400L)
-      val e = Tables.eventsFrom(s, d, cut)
+      val e = Tables.eventsWithin(s, d, 14L * 86400L)
         .filter(col("event_type") === "purchase")
         .withColumn("pool_id", col("user_id") % 4)
         .filter(col("pool_id") === 1L)
@@ -267,8 +266,8 @@ object DomainQueries {
     "api4_token_detail" -> { (s, d) =>
       val m = tokenMatrix(s, d).filter(col("token_id") === 42L)
       val o = Tables.orders(s, d)
-      val anchorSec = o.agg(max(col("o_orderdate"))).head()
-        .getTimestamp(0).toInstant.getEpochSecond
+      val anchorSec = litOrNull(Tables.maxTs(s, d, "orders", "o_orderdate")
+        .map(_.getEpochSecond))
       val firstSeen = o.filter(col("o_custkey") === 42L)
         .groupBy(col("o_custkey"))
         .agg(min(col("o_orderdate")).as("first_seen"))
@@ -283,7 +282,7 @@ object DomainQueries {
             holdersCount = (col("c_custkey") * 37) % 12000,
             fullyMinted = col("c_custkey") % 2 === 0,
             daysAlive = coalesce(
-              floor((lit(anchorSec)
+              floor((anchorSec
                 - unix_timestamp(col("first_seen").cast("timestamp")))
                 / 86400d).cast("double"),
               lit(0d))).cast("long").as("score"))
@@ -434,7 +433,9 @@ object DomainQueries {
     // as-of pick without a second scan).
     "t10b_alert_wallet_tvl" -> { (s, d) =>
       val e = Tables.events(s, d)
-      val anchorSec = e.agg(max(unix_timestamp(col("ts")))).head().getLong(0)
+      // unix_timestamp floors to the second, as getEpochSecond does
+      val anchorSec = litOrNull(Tables.maxTs(s, d, "events", "ts")
+        .map(_.getEpochSecond))
       val wr = s.createDataFrame(Seq(
         (101L, 1L, 30L, "purchase"),
         (102L, 2L, 120L, null.asInstanceOf[String]),
@@ -448,7 +449,7 @@ object DomainQueries {
         .join(broadcast(wr),
           col("user_id") === col("addr") &&
           (col("dir").isNull || col("event_type") === col("dir")) &&
-          col("sec") >= lit(anchorSec) - col("since_min") * 60L)
+          col("sec") >= anchorSec - col("since_min") * 60L)
         .groupBy(col("rule_id")).agg(count(lit(1)).as("n"))
       val wallet = wr.join(wc, Seq("rule_id"), "left")
         .select(col("rule_id"), lit("wallet_trade").as("kind"),
@@ -467,7 +468,7 @@ object DomainQueries {
           latestBy(col("value"), col("event_id")).as("tvl_now"),
           latestBy(col("value"),
             when(unix_timestamp(col("ts")) <=
-              lit(anchorSec) - col("window_min") * 60L, col("event_id")))
+              anchorSec - col("window_min") * 60L, col("event_id")))
             .as("tvl_past"))
         .select(col("rule_id"), lit("tvl_change").as("kind"),
           (col("tvl_past").isNotNull && col("tvl_past") =!= 0d &&
@@ -480,7 +481,7 @@ object DomainQueries {
   /** Shared A11/api1 matrix build — see the a11 entry for semantics. */
   private def tokenMatrix(s: SparkSession, d: String): DataFrame = {
     val e = Tables.events(s, d)
-    val cut = anchorMinusSec(e, col("ts"), 86400L)
+    val cut = cutoff(Tables.maxTs(s, d, "events", "ts"), 86400L)
     // Only purchase/click rows can contribute (p1's max_by ordinal is null
     // on every other type, p2 sums clicks only), so the type filter is a
     // no-op on the result but reaches the parquet scan as an In predicate —

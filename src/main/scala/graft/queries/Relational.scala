@@ -36,13 +36,12 @@ object Relational {
 
     // P2: time-window predicate anchored at max event time (the batch twin
     // of the reference's `created_at >= now() - toIntervalMinute(m)`).
-    // The anchor is collected as a literal (one tiny job) so the main-scan
-    // filter is a constant predicate that can prune parquet row groups —
-    // an in-plan anchor forces two full scans with zero pruning at 100 TB.
+    // The anchor is the footer max of the stored ts, a literal, so the
+    // main-scan filter is a constant predicate that prunes parquet row
+    // groups — an in-plan anchor forces two full scans with zero pruning
+    // at 100 TB.
     "p2_time_window" -> { (s, d) =>
-      val e = Tables.events(s, d)
-      val cut = anchorInstantMinusSec(e, col("ts"), 86400L)
-      Tables.eventsFrom(s, d, cut)
+      Tables.eventsWithin(s, d, 86400L)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), epochSec(col("ts")).as("ts_sec"))
         .canonOrder(col("event_id"))

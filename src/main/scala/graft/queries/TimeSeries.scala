@@ -21,6 +21,15 @@ object TimeSeries {
     Ohlcv.candles(Tables.events(s, d), Seq("event_type"),
       col("ts"), col("event_id"), col("value"), col("value"), 3600L)
 
+  /** `max(bucket_ts)` of [[hourly]] without running it: hourly groups
+    * every event row (no filter before its aggregate, null keys included),
+    * so its latest bucket is the bucket of the latest `ts` — the footer
+    * max. None on a table with no `ts`.
+    */
+  private def lastHour(s: SparkSession, d: String): Option[Long] =
+    Tables.maxTs(s, d, "events", "ts")
+      .map(t => Math.floorDiv(t.getEpochSecond, 3600L) * 3600L)
+
   private val duckHourly =
     """SELECT event_type,
          CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
@@ -198,14 +207,13 @@ object TimeSeries {
     // the reference's 4× re-scan loop (jobs/matrix-rollups.js:6-11,342-348).
     // At 100 TB this quarters the scan cost of the rollup job.
     "a14_multi_bucket" -> { (s, d) =>
-      val e = Tables.events(s, d)
-      // Literal anchor (one tiny job) instead of an in-plan crossJoin, and
-      // the widest (30d) window pushed into the parquet scan as a raw-nanos
-      // predicate — rows older than the widest window contribute to no
-      // output column, so the rollup never reads them.
-      def win(days: Int) =
-        col("ts") >= anchorMinusSec(e, col("ts"), days * 86400L)
-      Tables.eventsFrom(s, d, anchorInstantMinusSec(e, col("ts"), 30L * 86400L))
+      // Literal anchor (the footer max) instead of an in-plan crossJoin,
+      // and the widest (30d) window pushed into the parquet scan as a
+      // raw-nanos predicate — rows older than the widest window contribute
+      // to no output column, so the rollup never reads them.
+      val anchor = Tables.maxTs(s, d, "events", "ts")
+      def win(days: Int) = col("ts") >= cutoff(anchor, days * 86400L)
+      Tables.eventsWithin(s, d, 30L * 86400L)
         .groupBy(col("event_type"))
         .agg(
           xsumIf(col("value"), win(1)).as("vol_1d"),
@@ -411,8 +419,7 @@ object TimeSeries {
 
     // A16: windowed average fallback price (jobs/matrix-rollups.js:256-265).
     "a16_avg_window" -> { (s, d) =>
-      val e = Tables.events(s, d)
-      Tables.eventsFrom(s, d, anchorInstantMinusSec(e, col("ts"), 86400L))
+      Tables.eventsWithin(s, d, 86400L)
         .groupBy(col("event_type"))
         .agg(round4(xsum(col("value"), dp = 2) / count(col("value"))).as("avg_value"))
         .canonOrder(col("event_type"))
@@ -511,9 +518,8 @@ object TimeSeries {
     // W6: % change over N: last close vs close as-of cutoff
     // (api/util/pool-select.js:84-126).
     "w6_pct_change" -> { (s, d) =>
-      val c = hourly(s, d)
-      val cut = c.agg(max(col("bucket_ts"))).head().getLong(0) - 7L * 86400L
-      Ohlcv.pctChange(c, Seq("event_type"), lit(cut))
+      val cut = litOrNull(lastHour(s, d).map(_ - 7L * 86400L))
+      Ohlcv.pctChange(hourly(s, d), Seq("event_type"), cut)
         .select(col("event_type"), col("last_close"), col("prev_close"),
           col("change_pct"))
         .canonOrder(col("event_type"))
@@ -521,9 +527,8 @@ object TimeSeries {
 
     // O5: gainers — order by computed change desc (api/routes/tokens.js:320-416).
     "o5_gainers" -> { (s, d) =>
-      val c = hourly(s, d)
-      val cut = c.agg(max(col("bucket_ts"))).head().getLong(0) - 7L * 86400L
-      Ohlcv.pctChange(c, Seq("event_type"), lit(cut))
+      val cut = litOrNull(lastHour(s, d).map(_ - 7L * 86400L))
+      Ohlcv.pctChange(hourly(s, d), Seq("event_type"), cut)
         .select(col("event_type"), col("change_pct"))
         .canonOrder(col("change_pct").desc, col("event_type"))
     },
@@ -533,9 +538,12 @@ object TimeSeries {
     // plus one bar synthesized from the hourly candles inside the bucket
     // that "now" (batch twin: max event time) falls in, flagged `forming`.
     "w11_forming_bar" -> { (s, d) =>
+      // no event time: no bar is closed or forming, as comparisons with a
+      // NULL now keep no row
+      val now = lastHour(s, d)
       val h = hourly(s, d)
-      val now = h.agg(max(col("bucket_ts"))).head().getLong(0)
-      Ohlcv.withFormingBar(h, Seq("event_type"), 21600L, now)
+      Ohlcv.withFormingBar(if (now.isEmpty) h.filter(lit(false)) else h,
+        Seq("event_type"), 21600L, now.getOrElse(0L))
         .canonOrder(col("event_type"), col("bucket_ts"))
     },
 

@@ -33,7 +33,10 @@ import graft.operators.Dedup
   *      jobs, stages, tasks, summed and max task seconds a listener
   *      counted on the fastest pass. busy = task_sec / (min · cores):
   *      near 1 the cores were busy, near 0 the wall went to dispatch,
-  *      driver work or serialized single-task stages.
+  *      driver work or serialized single-task stages. build_sec and
+  *      build_jobs are the part of that pass spent building the
+  *      DataFrame, before its noop write: an eager job a builder runs
+  *      shows there.
   */
 object Ab {
   type Build = (SparkSession, String) => DataFrame
@@ -82,7 +85,15 @@ object Ab {
 
   private final case class Counts(jobs: Int = 0, stages: Int = 0,
                                   tasks: Int = 0, taskMs: Long = 0L,
-                                  maxTaskMs: Long = 0L)
+                                  maxTaskMs: Long = 0L) {
+    def +(o: Counts): Counts = Counts(jobs + o.jobs, stages + o.stages,
+      tasks + o.tasks, taskMs + o.taskMs, math.max(maxTaskMs, o.maxTaskMs))
+  }
+
+  /** One timed run: wall and build seconds, the build's jobs, and the
+    * counts of build and write together. */
+  private final case class Timing(sec: Double, buildSec: Double,
+                                  buildJobs: Int, counts: Counts)
 
   private class Counter extends SparkListener {
     private var c = Counts()
@@ -155,16 +166,25 @@ object Ab {
 
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)
-    val timings =
-      Array.fill(runs.size)(mutable.ArrayBuffer.empty[(Double, Counts)])
+    // the build's counts are taken between building and writing, so the
+    // listener's delivery wait stays out of both timed spans
+    def timed(p: Spec, f: Build): Timing = withConf(spark, p.conf) {
+      counter.take()
+      val t0 = System.nanoTime()
+      val df = f(spark, sfDir)
+      val built = (System.nanoTime() - t0) / 1e9
+      val build = counter.take()
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val sec = built + (System.nanoTime() - t1) / 1e9
+      Timing(sec, built, build.jobs, build + counter.take())
+    }
+    val timings = Array.fill(runs.size)(mutable.ArrayBuffer.empty[Timing])
     try for (pass <- 0 until passes) {
       val order = if (pass % 2 == 0) runs.indices else runs.indices.reverse
       order.foreach { i =>
         val (p, f) = runs(i)
-        counter.take()
-        val t0 = System.nanoTime()
-        exec(p, f, sfDir)
-        timings(i) += (((System.nanoTime() - t0) / 1e9, counter.take()))
+        timings(i) += timed(p, f)
       }
     } finally spark.sparkContext.removeSparkListener(counter)
 
@@ -172,12 +192,14 @@ object Ab {
     def f3(x: Double) = String.format(java.util.Locale.ROOT, "%.3f",
       Double.box(x))
     runs.indices.map { i =>
-      val ts = timings(i).sortBy(_._1)
-      val (best, c) = ts.head
+      val ts = timings(i).sortBy(_.sec)
+      val Timing(best, buildSec, buildJobs, c) = ts.head
       val n = ts.size
-      val median = (ts((n - 1) / 2)._1 + ts(n / 2)._1) / 2
+      val median = (ts((n - 1) / 2).sec + ts(n / 2).sec) / 2
       s"""{"spec":"${runs(i)._1.text}","passes":$n,"min":${f3(best)},""" +
-        s""""median":${f3(median)},"jobs":${c.jobs},"stages":${c.stages},""" +
+        s""""median":${f3(median)},"build_sec":${f3(buildSec)},""" +
+        s""""build_jobs":$buildJobs,""" +
+        s""""jobs":${c.jobs},"stages":${c.stages},""" +
         s""""tasks":${c.tasks},"task_sec":${f3(c.taskMs / 1e3)},""" +
         s""""max_task_sec":${f3(c.maxTaskMs / 1e3)},""" +
         s""""busy":${f3(c.taskMs / 1e3 / (best * cores))}}"""

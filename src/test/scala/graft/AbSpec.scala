@@ -55,4 +55,10 @@ class AbSpec extends AnyFunSuite {
     assert(seen("out").nonEmpty && seen("out").forall(_ == before))
     assert(spark.conf.get(widthKey) == before)
   }
+
+  test("api3's build starts no job once the warm-up cached its tables") {
+    val out = ab(Seq("api3_ohlcv_route"), Map.empty)
+    assert(out.size == 1)
+    assert(out.head.contains(""""build_jobs":0,"""), out.head)
+  }
 }

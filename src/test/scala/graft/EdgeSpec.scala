@@ -358,4 +358,25 @@ class EdgeSpec extends AnyFunSuite {
     // fit-to-224: the long side is exactly 224 on every row
     assert(m4.forall(r => math.max(r.getLong(3), r.getLong(4)) == 224L))
   }
+
+  test("time-anchored builders on zero-row tables: empty results, " +
+      "schema intact") {
+    // max() of an empty table is NULL: the anchor is None, never an NPE
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-tables")
+      .toString
+    Tables.names.foreach { t =>
+      spark.read.parquet(s"${SparkTestSession.sfDir}/$t.parquet").limit(0)
+        .write.parquet(s"$dir/$t.parquet")
+    }
+    Seq("api3_ohlcv_route", "p2_time_window", "w11_forming_bar",
+        "o5_gainers", "w6_pct_change", "a11_token_matrix", "api1_token_list",
+        "api4_token_detail", "f11_security_score", "a14_multi_bucket",
+        "a16_avg_window").foreach { n =>
+      def columns(d: String) = SparkEntry.queries(n)(spark, d).schema
+        .map(f => f.name -> f.dataType)
+      val got = SparkEntry.queries(n)(spark, dir)
+      assert(got.collect().isEmpty, n)
+      assert(columns(dir) == columns(SparkTestSession.sfDir), n)
+    }
+  }
 }
