@@ -106,7 +106,12 @@ object Bench {
     // full-outer RRF fusion in one statement on each engine)
     "t32_hybrid_rrf")
 
-  private def jsonStr(s: String): String =
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the driver's json.load fail and silently zero the round's
+    * correctness. Bench's JSON and Verify's oracle_sql.json both use it.
+    */
+  private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -118,11 +123,12 @@ object Bench {
     } + "\""
 
   /** Strip a trailing CANONICAL `ORDER BY col [asc|desc][, col…]` from an
-    * oracle SQL string — the DuckDB-side twin of the canonOrder flag, so
-    * both engines time the deployment shape. Only a structured trailing
-    * sort list matches: comma-separated identifiers (or positional
-    * ordinals), each with at most an asc/desc qualifier, then
-    * end-of-string. The r11 class `[a-z0-9_,.\s]+` also swallowed
+    * oracle SQL string. The Spark queries sort only when the order is
+    * the answer (the compare is row-order-insensitive), so the twin drops
+    * the oracle's canonical sort and both engines time the same shape.
+    * Only a structured trailing sort list matches: comma-separated
+    * identifiers (or positional ordinals), each with at most an asc/desc
+    * qualifier, then end-of-string. The r11 class `[a-z0-9_,.\s]+` also swallowed
     * LIMIT/OFFSET and their arguments (all spelled from that alphabet),
     * silently deleting the semantic top-k from four headline twins
     * (o2/b11/api1/t22) while Spark kept its orderBy+limit — the
@@ -506,18 +512,14 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // Bench measures the DEPLOYMENT shape: the trailing global sort on a
-    // surface query existed only to canonicalize the driver's oracle
-    // hash — proven unnecessary by the r11 order probe, so canonSort now
-    // defaults false everywhere (set explicitly here to stay immune to
-    // external -D overrides). It was the single largest distortion on
-    // the measured surface (t8 at 100×: 42.9 s sorted vs 14.4 s
-    // unsorted — the RangePartitioning sample pass re-runs the upstream
-    // kernel, then a full global sort follows). The DuckDB twins strip
-    // the SAME trailing ORDER BY (stripCanonOrder) so the
+    // Bench measures the DEPLOYMENT shape: no query carries a trailing
+    // global sort just to canonicalize the oracle hash (the r11 order
+    // probe proved the compare row-order-insensitive, and such a sort
+    // was the largest distortion on the measured surface: t8 at 100×,
+    // 42.9 s sorted vs 14.4 s unsorted). The DuckDB twins strip the
+    // oracle's trailing ORDER BY (stripCanonOrder) so the
     // engine-vs-engine comparison stays symmetric; semantic sorts
-    // (top-k feeding a limit) are untouched on both sides.
-    System.setProperty("graft.canon.sort", "false")
+    // (top-k feeding a limit) are kept on both sides.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tune.localSession(cpus.toInt, "WARN")

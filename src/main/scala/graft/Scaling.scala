@@ -141,9 +141,9 @@ object Scaling {
           col("lang").isin("en", "de", "es"))
         .select(col("doc_id"), col("lang"), col("quality"))
     },
-    // the sorted twin of the pair — since r11 the main surface runs
-    // canonOrder-off here, so the historical "t8 with its trailing
-    // global sort" shape needs an explicit entry to stay on the curve
+    // the sorted twin of the pair — no declared query carries a
+    // canonical sort, so the historical "t8 with its trailing global
+    // sort" shape needs an explicit entry to stay on the curve
     "t8_gate_sorted" -> { (s, d, _) =>
       import org.apache.spark.sql.functions.col
       val q = graft.functions.Text.qualityScore(col("text"))
@@ -279,10 +279,6 @@ object Scaling {
   private def ms(d: Double): Double = math.round(d * 1000).toDouble / 1000
 
   def main(args: Array[String]): Unit = {
-    // deployment shape, like Bench: the oracle-canonicalization sorts are
-    // OFF (see functions.Core.canonSort); the t8_gate_sorted adaptive
-    // entry below keeps the sorted/unsorted pair measurable
-    System.setProperty("graft.canon.sort", "false")
     val dirs: Seq[(String, Double)] = args.toSeq.map { a =>
       val Array(d, f) = a.split("=")
       (d, f.toDouble)

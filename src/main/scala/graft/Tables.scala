@@ -200,7 +200,8 @@ object Tables {
     *   - TIMESTAMP_NTZ → wall-clock micros: reinterpret in the session zone
     *                     (UTC) — a cast, same instant, no arithmetic.
     *   - TimestampType → already there.
-    * [[storedInstant]] is the same conversion for one stored value.
+    * [[storedInstant]] is the same conversion for one stored value, and
+    * [[graft.streaming.Streams.eventsStream]] applies it to the stream.
     *
     * Pushdown caveat: on the NTZ variant, Catalyst's
     * UnwrapCastInBinaryComparison keeps literal comparisons against the
@@ -212,7 +213,7 @@ object Tables {
     * orders/lineitem as NANOS again, their date filters need the same
     * treatment (the lint will flag it).
     */
-  private def normTs(df: DataFrame, c: String): DataFrame =
+  private[graft] def normTs(df: DataFrame, c: String): DataFrame =
     df.schema(c).dataType match {
       case LongType =>
         df.withColumn(c, timestamp_micros(expr(s"$c div 1000")))

@@ -189,30 +189,4 @@ object Core {
     * its table is empty. */
   def litOrNull(v: Option[Long]): Column =
     v.fold(lit(null).cast(LongType))(lit(_))
-
-  /** Whether [[CanonOps.canonOrder]] sorts. OFF by default since r12:
-    * the r11 zz_order_probe entry emitted Spark-ASC vs oracle-DESC rows
-    * and HASH-MATCHED in the driver's correctness gate, proving the
-    * compare is row-order-insensitive (the local tools/compare.py sorts
-    * rows too) — so the trailing global sort that existed only to
-    * canonicalize the oracle hash is pure overhead everywhere, and it is
-    * not free: at 100× sf0.1 the t8 quality gate measures 42.9 s sorted
-    * vs 14.4 s unsorted (the RangePartitioning sample pass re-runs the
-    * whole upstream kernel, then a full-width global sort follows). Set
-    * -Dgraft.canon.sort=true to reproduce the historical sorted dumps.
-    * Semantic orderings (top-k, pagination, leaderboards — anything
-    * whose orderBy feeds a limit or IS the query's meaning) never go
-    * through canonOrder and are unaffected by the flag.
-    */
-  def canonSort: Boolean =
-    sys.props.getOrElse("graft.canon.sort", "false").toBoolean
-
-  /** Oracle-canonicalization sort: `df.canonOrder(cols…)` — a trailing
-    * global sort present only when [[canonSort]] is on. See canonSort for
-    * the measured cost and the flag contract.
-    */
-  implicit class CanonOps(private val df: org.apache.spark.sql.DataFrame) {
-    def canonOrder(cols: Column*): org.apache.spark.sql.DataFrame =
-      if (canonSort) df.orderBy(cols: _*) else df
-  }
 }

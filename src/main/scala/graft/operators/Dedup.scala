@@ -193,35 +193,34 @@ object Dedup {
     * a chain A-B-C (B dies to A, C dies to B). Components make "keep the
     * group minimum" well defined.
     *
-    * Algorithm: iterative min-label propagation. Each round every vertex
-    * takes the minimum label among itself and its neighbors; stop when no
-    * label changed. Deterministic (mins over a fixed edge set — input
-    * order and partitioning never matter).
-    *
-    * Scale: one hash-shuffle groupBy per round over (edges + labels);
-    * rounds = component diameter, and verified near-dup components are
-    * near-cliques (every member passed a pairwise Jaccard/cosine gate),
-    * so the loop converges in single digits at any corpus size. For
-    * general graphs with long chains use
-    * [[connectedComponentsLargeStar]], which bounds rounds by O(log² n);
-    * the pair-to-group use case never needs it.
-    * `localCheckpoint` truncates each round's lineage so the plan does
-    * not grow with the iteration count.
+    * Two paths, one fixpoint — the component minimum (union-by-min-root
+    * IS it; min-label propagation converges to it; DedupSpec pins
+    * local ≡ distributed): a symmetric edge set of at most 4M rows runs
+    * union-find driver-side in one collect, a larger one runs the
+    * distributed loop [[minLabelComponents]]. Deterministic either way:
+    * mins over a fixed edge set, so input order and partitioning never
+    * matter.
     *
     * Output: (id, comp) for every vertex that appears in an edge, comp =
     * the component's minimum vertex id.
     */
-  def connectedComponents(edges: DataFrame): DataFrame =
-    connectedComponentsLogged(edges, null)
+  def connectedComponents(edges: DataFrame): DataFrame = {
+    val sym = symmetricEdges(edges)
+    // r16: the edges are already materialized (the checkpoint in
+    // symmetricEdges), so the count is one cheap job; below the bound
+    // (4M edges — corpus-scale dup graphs sit above it) the seed
+    // aggregate + N×(join + union + groupBy + pointer-jump + checkpoint
+    // + Σcomp probe) rounds — ~10-15 tiny all-core stages on
+    // dup-pair-sized frames — collapse into one collect
+    if (sym.count() <= (1L << 22)) unionFindComponents(sym)
+    else minLabelComponents(sym)
+  }
 
-  /** [[connectedComponents]] with a round-by-round log hook — the
-    * tools/D14Audit instrumentation surface (V/E sizes, per-round
-    * seconds). A null hook costs nothing: the guard skips the V/E
-    * count jobs entirely on the production path.
+  /** The undirected edge list (first two columns) as distinct (id, nbr)
+    * rows in both directions, checkpointed — the frame both
+    * [[connectedComponents]] paths read.
     */
-  private[graft] def connectedComponentsLogged(edges: DataFrame,
-                                               log: String => Unit)
-      : DataFrame = {
+  private[graft] def symmetricEdges(edges: DataFrame): DataFrame = {
     // symmetrize via explode, NOT union of two projections: the union
     // form evaluates the whole upstream EDGE-GENERATION chain once per
     // branch inside the checkpoint job — for d8/d14 that chain is the
@@ -230,7 +229,7 @@ object Dedup {
     // dominant stage at every decade)
     val c0 = edges.columns(0)
     val c1 = edges.columns(1)
-    val sym = edges
+    edges
       // explode_outer, not explode: the 2-element literal array is
       // never empty, and the non-outer form makes the optimizer infer
       // a size(...)>0 filter that re-builds the array per row (the t9
@@ -242,45 +241,53 @@ object Dedup {
       .select(col("e.id"), col("e.nbr"))
       .distinct()
       .localCheckpoint(true)
-    // r16: a bounded edge set runs union-find driver-side. The edges
-    // are already materialized (the checkpoint above), so the count is
-    // one cheap job; below the bound, the seed aggregate + N×(join +
-    // union + groupBy + pointer-jump + checkpoint + Σcomp probe) rounds
-    // — ~10-15 tiny all-core stages on dup-pair-sized frames — collapse
-    // into one collect. The fixpoint is EXACTLY the component minimum
-    // on both paths (min-label propagation converges to it; union-by-
-    // min-root IS it), pinned in DedupSpec local≡distributed. Above the
-    // bound (4M edges ≈ 64 MB — corpus-scale dup graphs) the
-    // distributed loop below is untouched; the audit hook (log != null)
-    // also keeps the distributed loop, since rounds are what it
-    // measures.
-    if (log == null && sym.count() <= (1L << 22)) {
-      // r17 (r16 verdict #4 / advice): primitive-long open-addressing
-      // union-find. The boxed java.util.HashMap[Long,Long] held up to
-      // ~4M boxed entries (~50 B each) near the bound — several hundred
-      // MB transient where its comment claimed 64 MB — and the Row
-      // collect boxed every edge on top. Now: executeCollect reads the
-      // checkpointed frame as compact UnsafeRows (getLong, no boxing) in
-      // ONE job, and the parent map is flat long arrays. True memory at
-      // the 4M-row bound: vertices ≤ sym rows, capacity = next pow2 ≥
-      // 2×keys = 2²³ slots → keys+vals 128 MB + used flags 8 MB, plus
-      // the ≤4M-row UnsafeRow batch — bounded and GC-quiet.
-      val rows = sym.select(col("id").cast("long"), col("nbr").cast("long"))
-        .queryExecution.executedPlan.executeCollect()
-      val uf = new LongUnionFind(rows.length)
-      rows.foreach { r => uf.union(r.getLong(0), r.getLong(1)) }
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      uf.foreachVertex { id =>
-        out += org.apache.spark.sql.Row(id, uf.find(id)) }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("comp",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      import scala.jdk.CollectionConverters._
-      return edges.sparkSession.createDataFrame(out.asJava, schema)
-    }
+  }
+
+  /** Driver-local components of a bounded symmetric edge frame.
+    * r17 (r16 verdict #4 / advice): primitive-long open-addressing
+    * union-find. The boxed java.util.HashMap[Long,Long] held up to ~4M
+    * boxed entries (~50 B each) near the bound — several hundred MB
+    * transient where its comment claimed 64 MB — and the Row collect
+    * boxed every edge on top. Now: executeCollect reads the checkpointed
+    * frame as compact UnsafeRows (getLong, no boxing) in ONE job, and the
+    * parent map is flat long arrays. True memory at the 4M-row bound:
+    * vertices ≤ sym rows, capacity = next pow2 ≥ 2×keys = 2²³ slots →
+    * keys+vals 128 MB + used flags 8 MB, plus the ≤4M-row UnsafeRow
+    * batch — bounded and GC-quiet.
+    */
+  private def unionFindComponents(sym: DataFrame): DataFrame = {
+    val rows = sym.select(col("id").cast("long"), col("nbr").cast("long"))
+      .queryExecution.executedPlan.executeCollect()
+    val uf = new LongUnionFind(rows.length)
+    rows.foreach { r => uf.union(r.getLong(0), r.getLong(1)) }
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.Row]
+    uf.foreachVertex { id =>
+      out += org.apache.spark.sql.Row(id, uf.find(id)) }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("comp",
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    import scala.jdk.CollectionConverters._
+    sym.sparkSession.createDataFrame(out.asJava, schema)
+  }
+
+  /** Distributed min-label propagation over a [[symmetricEdges]] frame:
+    * each round every vertex takes the minimum label among itself and
+    * its neighbors; stop when no label changed.
+    *
+    * Scale: one hash-shuffle groupBy per round over (edges + labels);
+    * rounds = component diameter, and verified near-dup components are
+    * near-cliques (every member passed a pairwise Jaccard/cosine gate),
+    * so the loop converges in single digits at any corpus size. For
+    * general graphs with long chains use
+    * [[connectedComponentsLargeStar]], which bounds rounds by O(log² n);
+    * the pair-to-group use case never needs it.
+    * `localCheckpoint` truncates each round's lineage so the plan does
+    * not grow with the iteration count.
+    */
+  private[graft] def minLabelComponents(sym: DataFrame): DataFrame = {
     // seed labels with round 1 already applied: min(id, Γ(id)) comes from
     // ONE aggregate over the symmetric edges — the identity seeding would
     // spend a full join+aggregate round computing exactly this
@@ -300,12 +307,8 @@ object Dedup {
       if (s == null) java.math.BigDecimal.ZERO else s
     }
     var prevSum = labelSum(labels)
-    if (log != null) log(s"cc: E(sym)=${sym.count()} V=${labels.count()}")
     var changed = true
-    var round = 0
     while (changed) {
-      round += 1
-      val t0 = System.nanoTime()
       val nbrLabels = sym
         .join(labels.select(col("id").as("nbr"), col("comp")), "nbr")
         .select(col("id"), col("comp"))
@@ -330,9 +333,6 @@ object Dedup {
       changed = s.compareTo(prevSum) != 0
       prevSum = s
       labels = next
-      if (log != null)
-        log(f"cc: round $round%d ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"changed=$changed%s")
     }
     labels
   }
@@ -470,7 +470,7 @@ object Dedup {
     * shuffled semi-join — BOTH sides move, including the corpus-scale
     * train gram frame, trading driver OOM for a corpus-sized shuffle.
     * For eval batteries too big to broadcast, the bloom-pruned map-side
-    * path (the d12 query via plans.Expressions.bloomFilterAgg) is the
+    * path (the d12 query via plans.Expressions.bloomPrune) is the
     * real answer: it shuffles contamination-rate, not corpus-size,
     * volume.
     * Published recipes use n=13; the fixture's 30-60-word docs want n=8.

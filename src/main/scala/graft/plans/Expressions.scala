@@ -2055,26 +2055,31 @@ object Expressions {
   def packBytes(dense: Column): Column =
     Bridge.column(PackBytesExpr(Bridge.expression(dense)))
 
-  /** Bloom-filter aggregate over LONG hashes (Spark's own
-    * BloomFilterAggregate, the engine's runtime-filter sketch — not in
-    * the public FunctionRegistry, so lifted through the bridge). The
-    * result is one small binary usable as a map-side membership prune
-    * via [[mightContain]]: false positives possible, false negatives
-    * never — so prune + exact-confirm pipelines stay exact.
+  /** Bloom prune: the `big` rows whose `bigKey` might be among the
+    * first column of `keys`. The filter is Spark's own
+    * BloomFilterAggregate (the engine's runtime-filter sketch — not in
+    * the public FunctionRegistry, so lifted through the bridge) over
+    * xxhash64 of the key, sized for `items` keys in `bits` bits.
+    * `scalar()` makes it a scalar subquery: planned lazily, built once,
+    * broadcast as one small binary to a map-side BloomFilterMightContain
+    * probe. False positives ride through, false negatives never happen —
+    * so a prune followed by the exact join stays exact.
     */
-  def bloomFilterAgg(hash: Column, estimatedItems: Long, numBits: Long)
-      : Column = Bridge.column(
-    new org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(Bridge.expression(hash),
-        org.apache.spark.sql.catalyst.expressions.Literal(estimatedItems),
-        org.apache.spark.sql.catalyst.expressions.Literal(numBits))
-      .toAggregateExpression())
-
-  /** Membership probe against a [[bloomFilterAgg]] binary. */
-  def mightContain(bloom: Column, hash: Column): Column =
-    Bridge.column(org.apache.spark.sql.catalyst.expressions
-      .BloomFilterMightContain(Bridge.expression(bloom),
-        Bridge.expression(hash)))
+  def bloomPrune(big: org.apache.spark.sql.DataFrame, bigKey: Column,
+                 keys: org.apache.spark.sql.DataFrame, items: Long,
+                 bits: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{
+      BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate
+      .BloomFilterAggregate
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val bloom = keys.agg(Bridge.column(new BloomFilterAggregate(
+        Bridge.expression(xxhash64(col(keys.columns.head))),
+        Literal(items), Literal(bits)).toAggregateExpression()).as("bf"))
+      .scalar()
+    big.filter(Bridge.column(BloomFilterMightContain(
+      Bridge.expression(bloom), Bridge.expression(xxhash64(bigKey)))))
+  }
 
   /** Column wrapper for [[CharNgramsExpr]] (input: string). */
   def charNgrams(text: Column, n: Int): Column =

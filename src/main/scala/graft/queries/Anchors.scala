@@ -33,14 +33,8 @@ object Anchors {
     if (nk <= 30_000_000L)
       big.join(broadcast(keys.select(col(keyName).as("__pf_key"))),
         bigKey === col("__pf_key"), "left_semi")
-    else {
-      val bloom = keys.agg(graft.plans.Expressions
-        .bloomFilterAgg(xxhash64(col(keyName)), nk,
-          math.max(16384L, 10L * nk)).as("bf"))
-        .scalar()
-      big.filter(graft.plans.Expressions
-        .mightContain(bloom, xxhash64(bigKey)))
-    }
+    else graft.plans.Expressions.bloomPrune(big, bigKey, keys, nk,
+      math.max(16384L, 10L * nk))
   }
 
   val defs: Map[String, Q] = Map(
@@ -78,7 +72,6 @@ object Anchors {
           round4(xsum(col("l_discount"), dp = 2)
             / count(col("l_discount"))).as("avg_disc"),
           count(lit(1)).as("count_order"))
-        .canonOrder(col("l_returnflag"), col("l_linestatus"))
     },
 
     // b3 = Q6 forecasting revenue change: the pure scan-filter-aggregate
@@ -170,15 +163,11 @@ object Anchors {
         else {
           val keys = prunedOrders.select(col("o_orderkey")).distinct()
           val nk = keys.count()
-          if (nk <= 2_000_000_000L) {
-            val bloom = keys.agg(graft.plans.Expressions
-              .bloomFilterAgg(xxhash64(col("o_orderkey")),
-                math.max(1L, nk),
-                math.max(16384L, 10L * nk)).as("bf"))
-              .scalar()
-            Tables.lineitem(s, d).filter(graft.plans.Expressions
-              .mightContain(bloom, xxhash64(col("l_orderkey"))))
-          } else Tables.lineitem(s, d)
+          if (nk <= 2_000_000_000L)
+            graft.plans.Expressions.bloomPrune(Tables.lineitem(s, d),
+              col("l_orderkey"), keys, math.max(1L, nk),
+              math.max(16384L, 10L * nk))
+          else Tables.lineitem(s, d)
         }
       prunedOrders
         .join(fact, col("o_orderkey") === col("l_orderkey"))
@@ -188,7 +177,6 @@ object Anchors {
         .groupBy(col("n_name"))
         .agg(xsum(col("l_extendedprice") * (lit(1d) - col("l_discount")), dp = 4)
           .as("revenue"))
-        .canonOrder(col("revenue").desc, col("n_name"))
     },
 
     // b6 = Q4 order-priority checking (shape): a date-windowed dim side
@@ -211,7 +199,6 @@ object Anchors {
           "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("order_count"))
-        .canonOrder(col("o_orderpriority"))
     },
 
     // b7 = Q12 shipmode/priority (shape): fact⋈dim with a date-windowed
@@ -231,7 +218,6 @@ object Anchors {
             col("o_orderpriority") === "2-HIGH").as("high_line_count"),
           count_if(col("o_orderpriority") =!= "1-URGENT" &&
             col("o_orderpriority") =!= "2-HIGH").as("low_line_count"))
-        .canonOrder(col("l_linestatus"))
     },
 
     // b8 = Q10 returned-item reporting: quarter-windowed orders joined
@@ -321,7 +307,6 @@ object Anchors {
           year(col("l_shipdate")).as("l_year"))
         .agg(xsum(col("l_extendedprice") * (lit(1d) - col("l_discount")), dp = 4)
           .as("revenue"))
-        .canonOrder(col("supp_nation"), col("cust_nation"), col("l_year"))
     },
 
     // b10 = Q13 customer distribution: LEFT OUTER join with a join-side
@@ -339,7 +324,6 @@ object Anchors {
         .agg(count(col("o_orderkey")).as("c_count"))
         .groupBy(col("c_count"))
         .agg(count(lit(1)).as("custdist"))
-        .canonOrder(col("custdist").desc, col("c_count").desc)
     },
 
     // b11 = Q21 suppliers-who-kept-orders-waiting (shape): late lines on
@@ -407,7 +391,6 @@ object Anchors {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("numcust"),
           xsum(col("c_acctbal"), dp = 2).as("totacctbal"))
-        .canonOrder(col("c_mktsegment"))
     },
 
     // b13 = Q14 promo revenue share: month-windowed fact ⋈ part dim with
@@ -498,7 +481,6 @@ object Anchors {
         .filter(col("total_revenue") === col("mr"))
         .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-        .canonOrder(col("s_suppkey"))
     },
 
     // b17 = Q8 market share: two-year revenue in one consuming region,
@@ -553,7 +535,6 @@ object Anchors {
             .otherwise(lit(0d)), dp = 4) / xsum(rev, dp = 4))
           .as("mkt_share"),
           count(lit(1)).as("n"))
-        .canonOrder(col("o_year"))
     },
 
     // b18 = Q2 minimum-cost supplier: the synthesized partsupp
@@ -637,7 +618,6 @@ object Anchors {
         .groupBy(col("n_name").as("nation"),
           year(col("o_orderdate")).as("o_year"))
         .agg(xsum(profit, dp = 4).as("sum_profit"), count(lit(1)).as("n"))
-        .canonOrder(col("nation"), col("o_year"))
     },
 
     // b20 = Q11 important stock: one nation's partsupp value per part,
@@ -680,8 +660,6 @@ object Anchors {
           col("p_partkey") === col("ps_partkey"))
         .groupBy(col("p_brand"), col("p_type"), col("p_size"))
         .agg(count_distinct(col("ps_suppkey")).as("supplier_cnt"))
-        .canonOrder(col("supplier_cnt").desc, col("p_brand"),
-          col("p_type"), col("p_size"))
     },
 
     // b22 = Q20 potential part promotion: suppliers holding more than
@@ -713,7 +691,6 @@ object Anchors {
           col("s_nationkey") === col("n_nationkey"))
         .join(holders, col("s_suppkey") === col("ps_suppkey"), "left_semi")
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
-        .canonOrder(col("s_suppkey"))
     },
   )
 

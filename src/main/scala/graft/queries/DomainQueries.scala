@@ -30,7 +30,6 @@ object DomainQueries {
         .select(col("event_id"),
           Domain.classifyDirection(col("event_type"), lit("purchase"))
             .as("direction"))
-        .canonOrder(col("event_id"))
     },
 
     // F2: pair normalization — uzig forced to quote side (core/parse.js:71-76).
@@ -47,7 +46,6 @@ object DomainQueries {
         .filter(col("p_partkey") <= 2000L)
         .select(col("p_partkey"), pair.as("pair"),
           np.getField("base").as("base"), np.getField("quote").as("quote"))
-        .canonOrder(col("p_partkey"))
     },
 
     // F3: display scaling (core/parse.js:36) — exponent varies per line.
@@ -57,7 +55,6 @@ object DomainQueries {
         .select(col("l_orderkey").as("okey"), col("l_linenumber").as("line"),
           round4(Domain.toDisp(col("l_extendedprice"), col("l_linenumber")))
             .as("disp"))
-        .canonOrder(col("okey"), col("line"))
     },
 
     // F4: price from reserves (core/prices.js:69-92) — per-user "pool"
@@ -73,7 +70,6 @@ object DomainQueries {
           round4(Domain.priceFromReserves(col("rq_base"), col("rb_base"),
             lit(6))).as("price"))
         .filter(col("price").isNotNull)
-        .canonOrder(col("user_id"))
     },
 
     // JOB: the composed price-from-reserves scheduled batch
@@ -105,7 +101,6 @@ object DomainQueries {
           round4(Domain.priceFromReserves(col("rq_base"), col("rb_base"),
             col("exp"))).as("price_in_zig"))
         .filter(col("price_in_zig").isNotNull) // finite positive only
-        .canonOrder(col("pool_id"))
     },
 
     // F5: pair-type fee schedule (api/routes/swap.js:21-32), incl. the
@@ -121,7 +116,6 @@ object DomainQueries {
         .filter(col("p_partkey") <= 2000L)
         .select(col("p_partkey"), ptype.as("pair_type"),
           Domain.pairFee(ptype).as("fee"))
-        .canonOrder(col("p_partkey"))
     },
 
     // F9: trade class thresholds (api/routes/trades.js:222-226).
@@ -131,7 +125,6 @@ object DomainQueries {
         .filter(col("event_id") < 2000L)
         .select(col("event_id"), round4(worth).as("worth"),
           Domain.tradeClass(worth).as("cls"))
-        .canonOrder(col("event_id"))
     },
 
     // F12: worth expression — ZIG-leg preferred, else notional × price
@@ -144,7 +137,6 @@ object DomainQueries {
         .filter(col("event_id") < 2000L)
         .select(col("event_id"), round4(w).as("worth"),
           Domain.tradeClass(w).as("cls"))
-        .canonOrder(col("event_id"))
     },
 
     // F11: security risk score (api/routes/tokens.js:1104-1143) — rule
@@ -175,7 +167,6 @@ object DomainQueries {
                 - unix_timestamp(col("first_seen").cast("timestamp")))
                 / 86400d).cast("double"),
               lit(0d))).cast("long").as("score"))
-        .canonOrder(col("c_custkey"))
     },
 
     // A11: token matrix — trades-price with 60m-avg-OHLCV fallback, the
@@ -184,7 +175,7 @@ object DomainQueries {
     // (latest purchase value = prices source; 1-day click average = OHLCV
     // source), customers play tokens.
     "a11_token_matrix" -> { (s, d) =>
-      tokenMatrix(s, d).canonOrder(col("token_id"))
+      tokenMatrix(s, d)
     },
 
     // §3.2 serving composite: the GET /tokens list page — matrix metrics,
@@ -254,7 +245,6 @@ object DomainQueries {
         .select(col("pool_id"), col("bucket_ts"), col("open"), col("high"),
           col("low"), col("close"), col("volume"), col("trade_count"))
         .orderBy(col("bucket_ts").desc).limit(300)
-        .canonOrder(col("bucket_ts"))
     },
 
     // §3 serving composite #4: the GET /tokens/:id detail — ONE token's
@@ -307,7 +297,6 @@ object DomainQueries {
             .as("denom"),
           substring_index(kvStr, ":", 1).as("kv_denom"),
           substring_index(kvStr, ":", -1).cast("long").as("kv_amount"))
-        .canonOrder(col("doc_id"))
     },
 
     // §2.8 JSON: extract a typed field from the JSON props payload
@@ -318,7 +307,6 @@ object DomainQueries {
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
-        .canonOrder(col("event_type"))
     },
 
     // §2.8 JSON, typed form: from_json with an explicit schema — the
@@ -330,7 +318,6 @@ object DomainQueries {
           from_json(col("props"),
             org.apache.spark.sql.types.StructType.fromDDL("k INT"))
             .getField("k").cast("long").as("k"))
-        .canonOrder(col("event_id"))
     },
 
     // §2.8 / A-family: typed pivot — per-user cross-tab of event counts
@@ -349,7 +336,6 @@ object DomainQueries {
         .pivot("event_type", types)
         .agg(count(lit(1)).as("n"), xsum(col("value"), dp = 2).as("vol"))
         .na.fill(0L, types.map(t => s"${t}_n"))
-        .canonOrder(col("user_id"))
     },
 
     // §2.8 array: explode words, global top-20 by frequency.
@@ -377,7 +363,6 @@ object DomainQueries {
       val h3 = regexp_replace(h2, "[/?].*$", "")
       Tables.documents(s, d)
         .select(col("doc_id"), raw.as("raw"), h3.as("handle"))
-        .canonOrder(col("doc_id"))
     },
 
     // J10: explicit in-memory hash join — the pool-cache Map analog
@@ -391,7 +376,6 @@ object DomainQueries {
         .join(broadcast(dim), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"), xsum(col("l_quantity"), dp = 2).as("qty"))
-        .canonOrder(col("p_brand"))
     },
 
     // T10: alert CEP pass — evaluate a small rules table against the
@@ -419,7 +403,6 @@ object DomainQueries {
           .otherwise(col("max_value") >= col("threshold")))
         .select(col("rule_id"), col("event_type"), col("kind"),
           col("fired"))
-        .canonOrder(col("rule_id"))
     },
 
     // T10 (remaining kinds): wallet_trade + tvl_change rule evaluation
@@ -474,7 +457,7 @@ object DomainQueries {
           (col("tvl_past").isNotNull && col("tvl_past") =!= 0d &&
             abs(chg) >= col("delta_pct")).as("fired"),
           round4(chg).as("metric"))
-      wallet.unionByName(tvl).canonOrder(col("rule_id"))
+      wallet.unionByName(tvl)
     }
   )
 

@@ -21,7 +21,6 @@ object PipelineAnn {
     "n1_ann_topk" -> { (s, d) =>
       val v = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(v.filter(col("vec_id") < 10), v, k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N10: SQ8 scalar-quantized ANN — n1's search over a byte-per-
@@ -33,7 +32,6 @@ object PipelineAnn {
     "n10_ann_sq8" -> { (s, d) =>
       val v = Tables.embeddings(s, d)
       Similarity.sq8TopK(v.filter(col("vec_id") < 10), v, k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N2: LSH-bucketed ANN — same output shape as n1, candidates from
@@ -46,7 +44,6 @@ object PipelineAnn {
     "n2_ann_lsh" -> { (s, d) =>
       val v = Tables.embeddings(s, d)
       Similarity.lshTopK(v.filter(col("vec_id") < 10), v, k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N5: multi-probe LSH ANN — n2 plus Hamming-1 bucket probing on the
@@ -59,7 +56,6 @@ object PipelineAnn {
     "n5_ann_multiprobe" -> { (s, d) =>
       val v = Tables.embeddings(s, d)
       Similarity.lshTopKMultiProbe(v.filter(col("vec_id") < 10), v, k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N3: IVF-bucketed ANN — centroid assignment + nprobe-bucket search,
@@ -77,7 +73,6 @@ object PipelineAnn {
       val v = Tables.embeddings(s, d)
       Similarity.ivfTopK(v.filter(col("vec_id") < 10), v,
         centroids = v.filter(col("vec_id") % 50 === 0), k = 5, nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N12: FILTERED ANN — vector search under a metadata predicate, the
@@ -101,7 +96,6 @@ object PipelineAnn {
         v.filter(col("label") < 3),
         centroids = Similarity.adaptiveTrainCentroids(v), k = 5,
         nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N13: IVF + SQ8 composite — FAISS's "IVF,SQ8": coarse cells prune
@@ -121,7 +115,6 @@ object PipelineAnn {
       Similarity.ivfSq8TopK(v.filter(col("vec_id") < 10), v,
         centroids = Similarity.adaptiveTrainCentroids(v), k = 5,
         nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N4: IVF with TRAINED centroids — two deterministic Lloyd iterations
@@ -137,7 +130,6 @@ object PipelineAnn {
         v, v.filter(col("vec_id") % 50 === 0), iters = 2)
       Similarity.ivfTopK(v.filter(col("vec_id") < 10), v,
         centroids = trained, k = 5, nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N9: IVF with SAMPLE-BOUNDED training — the production answer to the
@@ -158,7 +150,6 @@ object PipelineAnn {
         v, targetSample = 400L, kCentroids = 16L, iters = 2)
       Similarity.ivfTopK(v.filter(col("vec_id") < 10), v,
         centroids = trained, k = 5, nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N14: the PRODUCTION quantized composite — n9's sample-bounded
@@ -175,7 +166,6 @@ object PipelineAnn {
         v, targetSample = 400L, kCentroids = 16L, iters = 2)
       Similarity.ivfSq8TopK(v.filter(col("vec_id") < 10), v,
         centroids = trained, k = 5, nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N16: two-level (coarse-quantized) IVF — the 1000×+ BUILD geometry
@@ -193,7 +183,6 @@ object PipelineAnn {
       val v = Tables.embeddings(s, d)
       Similarity.ivfTopKTwoLevel(v.filter(col("vec_id") < 10), v,
         k = 5, nprobe = 8, wAssign = 2)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N6: product-quantization ANN — the corpus compresses to m codebook
@@ -214,7 +203,6 @@ object PipelineAnn {
     "n6_ann_pq" -> { (s, d) =>
       val v = Tables.embeddings(s, d)
       Similarity.pqTopK(v.filter(col("vec_id") < 10), v, k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N15: PQ search from the PACKED byte artifact — n6's exact
@@ -236,7 +224,6 @@ object PipelineAnn {
       val packed = Similarity.pqEncodePacked(v, cb)
       Similarity.pqTopKFromPackedCodes(
         v.filter(col("vec_id") < 10), v, cb, packed, k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N7: IVF+PQ composite — the production serving shape (FAISS
@@ -257,7 +244,6 @@ object PipelineAnn {
         centroids = Similarity.sampledTrainCentroids(
           v, targetSample = 400L, kCentroids = 16L, iters = 2),
         k = 5, nprobe = 8)
-        .canonOrder(col("probe_id"), col("rank"))
     },
 
     // N8: corpus-wide k-NN GRAPH — every vector gets its LSH-bucketed
@@ -276,7 +262,6 @@ object PipelineAnn {
     // through 100×. The oracle derives the SAME width from COUNT(*).
     "n8_knn_graph" -> { (s, d) =>
       Similarity.knnGraphAuto(Tables.embeddings(s, d), k = 5)
-        .canonOrder(col("probe_id"), col("rank"))
     },
   )
 

@@ -21,14 +21,12 @@ object PipelineDedup {
     // D1: exact dedup — md5-of-normalized-text hash groupBy, keep-first.
     "d1_exact_dedup" -> { (s, d) =>
       Dedup.exactDedup(Tables.documents(s, d))
-        .canonOrder(col("keep_doc_id"))
     },
 
     // D2: MinHash+LSH near-dup (the 100 TB dedup path): banded signatures →
     // bucket equi-join candidates → exact-Jaccard verify. Never O(n²).
     "d2_minhash_neardup" -> { (s, d) =>
       Dedup.minhashNearDup(Tables.documents(s, d), n = 3, theta = 0.8)
-        .canonOrder(col("doc_a"), col("doc_b"))
     },
 
     // D3: SimHash document sketch (32-bit, md5-backed so the oracle can
@@ -36,21 +34,18 @@ object PipelineDedup {
     "d3_simhash" -> { (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), Text.simhash32(col("text")).as("simhash"))
-        .canonOrder(col("doc_id"))
     },
 
     // D4: n-gram Jaccard brute force — the correctness baseline d2 is
     // checked against (same pair values, lower threshold).
     "d4_ngram_jaccard" -> { (s, d) =>
       Dedup.jaccardBruteForce(Tables.documents(s, d), n = 3, theta = 0.5)
-        .canonOrder(col("doc_a"), col("doc_b"))
     },
 
     // D5: embedding-cosine near-dup, brute force over the pair space
     // (baseline; n2 is the bucketed scale path).
     "d5_embedding_neardup" -> { (s, d) =>
       Similarity.cosinePairs(Tables.embeddings(s, d), theta = 0.4)
-        .canonOrder(col("vec_a"), col("vec_b"))
     },
 
     // D6: dedup APPLY — the pipeline step that consumes d2's pairs: drop
@@ -63,7 +58,6 @@ object PipelineDedup {
         .select(col("doc_b").as("doc_id")).distinct()
       docs.join(drop, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // D7: decontamination — the corpus-build step that drops training
@@ -84,7 +78,6 @@ object PipelineDedup {
       docs.filter(col("doc_id") % 20 =!= 0)
         .join(contaminated, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // D11: EMBEDDING-space decontamination — d7's semantic cousin: drop
@@ -110,7 +103,6 @@ object PipelineDedup {
         .select(col("vec_id")).distinct()
       train.join(contaminated, Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("label").cast("long").as("label"))
-        .canonOrder(col("vec_id"))
     },
 
     // D8: duplicate GROUPS — connected components over d2's verified
@@ -126,7 +118,6 @@ object PipelineDedup {
       comp.join(sizes, "comp")
         .select(col("id").as("doc_id"), col("comp").as("group_id"),
           col("group_size"))
-        .canonOrder(col("group_id"), col("doc_id"))
     },
 
     // D10: group-correct dedup APPLY — keep exactly one doc (the minimum
@@ -144,7 +135,6 @@ object PipelineDedup {
         .select(col("id").as("doc_id"))
       docs.join(drop, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // D9: SemDeDup-style semantic pruning — cluster the embedding space,
@@ -160,7 +150,6 @@ object PipelineDedup {
       val v = Tables.embeddings(s, d)
       Similarity.semanticPrune(v, v.filter(col("vec_id") % 50 === 0),
           theta = 0.4)
-        .canonOrder(col("vec_id"))
     },
 
     // D12: bloom-pruned exact decontamination — the 100 TB shape of a
@@ -182,17 +171,12 @@ object PipelineDedup {
         " "))
       val evalFps = docs.filter(col("doc_id") % 20 === 0)
         .select(fp.as("fp"))
-      // scalar subquery: might_contain requires a constant/scalar bloom —
-      // the engine plans the build once and broadcasts the binary, the
-      // same shape as its own injected runtime filters
-      val bloom = evalFps.agg(graft.plans.Expressions
-        .bloomFilterAgg(xxhash64(col("fp")), 1000L, 16384L).as("bf"))
-        .scalar()
       val train = docs.filter(col("doc_id") % 20 =!= 0)
         .select(col("doc_id"), col("lang"), col("source"), fp.as("fp"))
-      val suspects = train
-        .filter(graft.plans.Expressions
-          .mightContain(bloom, xxhash64(col("fp"))))
+      // the bloom is a scalar subquery, planned once and broadcast as one
+      // binary — the same shape as the engine's injected runtime filters
+      val suspects = graft.plans.Expressions
+        .bloomPrune(train, col("fp"), evalFps, 1000L, 16384L)
         .select(col("doc_id"), col("fp"))
       // no broadcast hint: the suspects side is already bloom-pruned to
       // ~contamination volume and evalFps grows with the eval battery —
@@ -202,7 +186,6 @@ object PipelineDedup {
         .select(col("doc_id"))
       train.join(confirmed, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // D13: exact n-gram-overlap decontamination — the GPT-3-style rule: a
@@ -223,7 +206,6 @@ object PipelineDedup {
         docs.filter(col("doc_id") % 20 === 0), n = 8)
       train.join(contaminated, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // D14: canonical-doc retention — keep the BEST doc per duplicate
@@ -240,7 +222,6 @@ object PipelineDedup {
       Dedup.canonicalPick(docs,
           Dedup.minhashNearDup(docs, n = 3, theta = 0.8))
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // D15: per-source boilerplate profiling — the C4/CCNet cleaning
@@ -255,7 +236,6 @@ object PipelineDedup {
     // unbounded).
     "d15_boilerplate" -> { (s, d) =>
       Dedup.boilerplateProfile(Tables.documents(s, d), w = 2, minDocs = 3)
-        .canonOrder(col("doc_id"))
     },
 
     // D16: embedding-space duplicate groups — the SemDeDup-adjacent
@@ -271,7 +251,6 @@ object PipelineDedup {
     "d16_graph_dedup" -> { (s, d) =>
       Dedup.embeddingGraphGroupsAuto(Tables.embeddings(s, d), k = 5,
           theta = 0.3)
-        .canonOrder(col("id"))
     },
 
     // D17: exact duplicated-substring spans — the Lee-et-al suffix-array
@@ -283,7 +262,6 @@ object PipelineDedup {
     // never n²; the island window partitions per pair+diagonal.
     "d17_substring_runs" -> { (s, d) =>
       Dedup.substringRuns(Tables.documents(s, d), k = 5, minRun = 10)
-        .canonOrder(col("doc_a"), col("doc_b"))
     },
 
     // D18: CDC-chunk near-dup pairs — docs sharing >= 3 distinct chunk
@@ -296,7 +274,6 @@ object PipelineDedup {
     "d18_cdc_neardup" -> { (s, d) =>
       Dedup.cdcNearDup(Tables.documents(s, d), w = 8, minShared = 3,
           maxDocsPerChunk = Some(16))
-        .canonOrder(col("doc_a"), col("doc_b"))
     },
   )
 

@@ -65,7 +65,6 @@ object PipelineMedia {
           length(unhex(m)).cast("long").as("n_bytes"),
           size(col("embedding")).cast("long").as("emb_dim"),
           substring(m, 1, 8).as("header_hex"))
-        .canonOrder(col("doc_id"))
     },
 
     // M2: REAL media decode in the mapPartitions codec shape (batch
@@ -150,7 +149,6 @@ object PipelineMedia {
           }
         }
         .toDF()
-        .canonOrder(col("doc_id"))
     },
 
     // M3: REAL multi-frame container decode + frame sampling (the m2
@@ -241,7 +239,6 @@ object PipelineMedia {
           }
         }
         .toDF()
-        .canonOrder(col("doc_id"), col("frame_idx"))
     },
 
     // M4: REAL batched resize — the mapInPandas batch shape in Scala:
@@ -294,7 +291,6 @@ object PipelineMedia {
           }
         }
         .toDF()
-        .canonOrder(col("doc_id"))
     },
   )
 

@@ -33,7 +33,6 @@ object PipelineText {
             round4(lit(1d) - col("n_unique").cast("double")
               / col("n_shingles").cast("double")))
             .otherwise(lit(0d)))
-        .canonOrder(col("doc_id"))
     },
 
     // T1: per-source corpus stats (doc counts, language spread, length
@@ -47,7 +46,6 @@ object PipelineText {
           round4(davg(col("n_chars"))).as("avg_chars"),
           round4(davg(col("wc"))).as("avg_words"),
           max(col("wc")).cast("long").as("max_words"))
-        .canonOrder(col("source"))
     },
 
     // T2: marker-word language-ID heuristic with fixed-precedence argmax.
@@ -56,7 +54,6 @@ object PipelineText {
         .withColumn("lang_pred", Text.langPredict(col("text")))
         .select(col("doc_id"), col("lang"), col("lang_pred"),
           (col("lang") === col("lang_pred")).as("is_match"))
-        .canonOrder(col("doc_id"))
     },
 
     // T3: rational-arithmetic quality score (stopword ratio + length
@@ -64,7 +61,6 @@ object PipelineText {
     "t3_quality_score" -> { (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), Text.qualityScore(col("text")).as("quality"))
-        .canonOrder(col("doc_id"))
     },
 
     // T4: token counting — whitespace tokens + BPE-ish greedy chunk count.
@@ -76,7 +72,6 @@ object PipelineText {
           size(Text.words(col("text"))).cast("long").as("ws_tokens"),
           regexp_count(norm, lit("[a-z0-9]{1,3}")).cast("long")
             .as("subword_tokens"))
-        .canonOrder(col("doc_id"))
     },
 
     // T5: document fingerprints — whole-doc md5 + min-shingle-hash
@@ -87,7 +82,6 @@ object PipelineText {
           md5(Text.normalize(col("text"))).as("doc_fp"),
           array_min(transform(Text.shingleSet(col("text"), 3), x => md5(x)))
             .as("min_shingle_fp"))
-        .canonOrder(col("doc_id"))
     },
 
     // T7s: deterministic content-hash sampling — the reproducible
@@ -99,7 +93,6 @@ object PipelineText {
         .filter(substring(md5(Text.normalize(col("text"))), 1, 1)
           .isin("0", "1", "2", "3", "4", "5", "6", "7"))
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // T11: stratified deterministic sampling — the mixture-weighting pass
@@ -118,7 +111,6 @@ object PipelineText {
       Tables.documents(s, d)
         .filter(keep)
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // T12: sequence packing — concatenate-and-split into fixed-token-
@@ -151,8 +143,6 @@ object PipelineText {
         .select(col("doc_id"), col("source"), col("shard"), col("tok"),
           expr(s"(cum - tok) div $budget").as("chunk_id"),
           expr(s"(cum - tok) % $budget").as("chunk_offset"))
-        .canonOrder(col("source"), col("shard"), col("chunk_id"),
-          col("chunk_offset"), col("doc_id"))
     },
 
     // T23: pack MANIFEST — the dataloader-facing artifact t12's per-doc
@@ -189,7 +179,6 @@ object PipelineText {
             "s -> concat(cast(s.off as string), ':', " +
             "cast(s.doc_id as string), ':', cast(s.tok as string))))")
             .as("boundaries"))
-        .canonOrder(col("source"), col("shard"), col("chunk_id"))
     },
 
     // T24: dataset card — the one-stop per-(source, lang) corpus report a
@@ -211,7 +200,6 @@ object PipelineText {
     "t24_dataset_card" -> { (s, d) =>
       import graft.operators.CorpusCard
       CorpusCard.card(CorpusCard.signals(Tables.documents(s, d)))
-        .canonOrder(col("source"), col("lang"))
     },
 
     // T8s: quality-gate filter — the corpus-cleaning pass that consumes
@@ -224,7 +212,6 @@ object PipelineText {
         .filter(col("quality") >= 40d &&
           col("lang").isin("en", "de", "es"))
         .select(col("doc_id"), col("lang"), col("quality"))
-        .canonOrder(col("doc_id"))
     },
 
     // T9s: character-trigram frequency profile per language — the feature
@@ -248,7 +235,6 @@ object PipelineText {
         .agg(count(lit(1)).as("n"))
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= 5)
-        .canonOrder(col("lang"), col("rn"))
     },
 
     // T13: corpus vocabulary statistics — document frequency per word and
@@ -312,7 +298,6 @@ object PipelineText {
         .filter(col("rn") <= 3)
         .select(col("doc_id"), col("word"), col("tf"),
           round4(col("score")).as("score"))
-        .canonOrder(col("doc_id"), col("score").desc, col("word"))
     },
 
     // T14: statistical length-outlier filter — drop docs outside the
@@ -334,7 +319,6 @@ object PipelineText {
       docs.join(broadcast(bounds), "source")
         .filter(col("tok") >= col("lo") && col("tok") <= col("hi"))
         .select(col("doc_id"), col("source"), col("tok"))
-        .canonOrder(col("doc_id"))
     },
 
     // T25: content-defined chunking — CDC boundaries from a rolling
@@ -343,7 +327,6 @@ object PipelineText {
     // except one per-doc boundary fold; no cross-doc shuffle.
     "t25_cdc_chunks" -> { (s, d) =>
       Dedup.cdcChunks(Tables.documents(s, d), w = 8)
-        .canonOrder(col("doc_id"), col("chunk_ix"))
     },
 
     // T19: hashed-linear quality classifier — the fastText-style scorer
@@ -370,7 +353,6 @@ object PipelineText {
           round4(col("s_milli").cast("double") /
             (col("n_tok") * 1000.0)).as("score"),
           (col("s_milli") > 0).as("keep"))
-        .canonOrder(col("doc_id"))
     },
 
     // T20: unigram-surprisal quality filter — the CCNet perplexity gate
@@ -402,7 +384,6 @@ object PipelineText {
             .when(col("bits_sum") * 100 < col("n_tok") * 425,
               lit("middle"))
             .otherwise(lit("tail")).as("band"))
-        .canonOrder(col("doc_id"))
     },
 
     // T26: interpolated BIGRAM surprisal — t20 with conditional context.
@@ -466,7 +447,6 @@ object PipelineText {
             .when(col("bits_sum") * 100 < col("n_tok") * 2 * 420,
               lit("middle"))
             .otherwise(lit("tail")).as("band"))
-        .canonOrder(col("doc_id"))
     },
 
     // T27: BPE merge training — the four most-frequent adjacent-symbol
@@ -478,7 +458,6 @@ object PipelineText {
     // argmaxes.
     "t27_bpe_merges" -> { (s, d) =>
       Tokenize.bpeMerges(Tables.documents(s, d), k = 4)
-        .canonOrder(col("step"))
     },
 
     // T27b: the PRODUCTION trainer — one corpus pass collects the
@@ -491,7 +470,6 @@ object PipelineText {
     // distributed on dense-tie corpora.
     "t27b_bpe_local" -> { (s, d) =>
       Tokenize.bpeMergesLocal(Tables.documents(s, d), k = 4)
-        .canonOrder(col("step"))
     },
 
     // T28: corpus encoding under the t27 tokenizer — per-doc BPE token
@@ -501,7 +479,6 @@ object PipelineText {
     // through its own four unrolled merge steps.
     "t28_bpe_encode" -> { (s, d) =>
       Tokenize.bpeEncode(Tables.documents(s, d), k = 4)
-        .canonOrder(col("doc_id"))
     },
 
     // T29: DSIR importance weights — data selection via importance
@@ -523,7 +500,6 @@ object PipelineText {
       graft.operators.Selection.dsirWeights(
         Tables.documents(s, d), isTarget = col("lang") === "en",
         hash = graft.operators.Selection.md5Bucket(1024))
-        .canonOrder(col("doc_id"))
     },
 
     // T21: retrieval chunking — the RAG indexing step: overlapping
@@ -549,7 +525,6 @@ object PipelineText {
           md5(concat_ws(" ",
             slice(col("w"), (col("start_tok") + 1).cast("int"),
               col("n_tok").cast("int")))).as("chunk_fp"))
-        .canonOrder(col("doc_id"), col("chunk_idx"))
     },
 
     // T22: BM25 document retrieval — relevance-ranked full-text search
@@ -587,7 +562,6 @@ object PipelineText {
       Retrieval.hybridRrfTopK(Tables.documents(s, d),
         Seq("dup", "vector", "merge", "scan"), Tables.embeddings(s, d),
         probeId = 0L, k = 20)
-        .canonOrder(col("doc_id"))
     },
 
     // API5: search-result facets — the serving composite every search
@@ -607,7 +581,6 @@ object PipelineText {
           array(terms.map(lit): _*)))
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
-        .canonOrder(col("lang"), col("source"))
     },
 
     // T18: deterministic stratified dataset split — the reproducible
@@ -627,7 +600,6 @@ object PipelineText {
             .when(b0 < 230, lit("val"))
             .otherwise(lit("test")))
         .select(col("doc_id"), col("lang"), col("split"))
-        .canonOrder(col("doc_id"))
     },
 
     // T16: PII redaction — regex detect-and-mask of emails and IPv4s, the
@@ -652,7 +624,6 @@ object PipelineText {
           Text.piiCount(aug, Text.emailPattern).as("n_emails"),
           Text.piiCount(aug, Text.ipv4Pattern).as("n_ips"),
           md5(Text.redactPii(aug)).as("redacted_fp"))
-        .canonOrder(col("doc_id"))
     },
 
     // T17: domain-mixture sampling — downsample each source to a target
@@ -673,7 +644,6 @@ object PipelineText {
       domainMix(Tables.documents(s, d),
           expr("try_cast(substring(source, 4) AS BIGINT)") % 4 + 1)
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // PIPE1: the corpus build, COMPOSED — the capstone chain a training-
@@ -709,7 +679,6 @@ object PipelineText {
           conv(substring(col("h"), 1, 2), 16, 10).cast("long") % 16)
         .withColumn("ordinal", row_number().over(w).cast("long"))
         .select(col("doc_id"), col("shard"), col("ordinal"))
-        .canonOrder(col("shard"), col("ordinal"))
     },
 
     // T31: fractional SOURCE UPSAMPLING — the Pile/LLaMA-style mixture
@@ -733,7 +702,6 @@ object PipelineText {
             + when(col("wh") % 2 === 1 && b0 < 128, 1L).otherwise(0L))
         .select(col("doc_id"), col("source"), col("n_rep"),
           explode(sequence(lit(1L), col("n_rep"))).as("replica_idx"))
-        .canonOrder(col("doc_id"), col("replica_idx"))
     },
 
     // PIPE2: the selection-era corpus build — DSIR importance gate
@@ -780,8 +748,6 @@ object PipelineText {
         .select(col("doc_id"), col("source"), col("shard"), col("tok"),
           expr(s"(cum - tok) div $budget").as("chunk_id"),
           expr(s"(cum - tok) % $budget").as("chunk_offset"))
-        .canonOrder(col("source"), col("shard"), col("chunk_id"),
-          col("chunk_offset"), col("doc_id"))
     },
 
     "pipe1_corpus_build" -> { (s, d) =>
@@ -818,7 +784,6 @@ object PipelineText {
             .when(b0 < 230, lit("val"))
             .otherwise(lit("test")))
         .select(col("doc_id"), col("lang"), col("source"), col("split"))
-        .canonOrder(col("doc_id"))
     },
   )
 

@@ -31,7 +31,6 @@ object Relational {
           col("l_orderkey").as("okey"),
           col("l_linenumber").as("line"),
           (col("l_extendedprice") * (lit(1d) - col("l_discount"))).as("net"))
-        .canonOrder(col("okey"), col("line"))
     },
 
     // P2: time-window predicate anchored at max event time (the batch twin
@@ -44,7 +43,6 @@ object Relational {
       Tables.eventsWithin(s, d, 86400L)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), epochSec(col("ts")).as("ts_sec"))
-        .canonOrder(col("event_id"))
     },
 
     // P3: enum/equality filter conjunction (jobs/leaderboards.js:35-37).
@@ -53,7 +51,6 @@ object Relational {
         .filter(col("event_type") === "purchase" && col("value") > 50d &&
           col("user_id") =!= 0L)
         .select(col("event_id"), col("user_id"), col("value"))
-        .canonOrder(col("event_id"))
     },
 
     // P4: pattern predicates, incl. NOT LIKE (jobs/holders-refresher.js:219).
@@ -62,7 +59,6 @@ object Relational {
         .filter(!col("source").startsWith("src1") &&
           col("text").contains("spark"))
         .select(col("doc_id"), col("lang"), col("source"))
-        .canonOrder(col("doc_id"))
     },
 
     // P5: dynamic predicate assembly — programmatic Column composition
@@ -75,7 +71,6 @@ object Relational {
       Tables.events(s, d)
         .filter(conds.reduce(_ && _))
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .canonOrder(col("event_id"))
     },
 
     // P6: multi-key OR resolution ranked by match quality, best row wins
@@ -117,7 +112,6 @@ object Relational {
           // cost (the measured whole of j1's marginal, tools/J1Audit)
           xsum(col("l_extendedprice") * (lit(1d) - col("l_discount"))).as("revenue"),
           count(lit(1)).as("n_lines"))
-        .canonOrder(col("r_name"))
     },
 
     // J2: left join to optional aggregated facts (api/routes/tokens.js:91-101).
@@ -130,7 +124,6 @@ object Relational {
         .select(col("o_orderkey").as("okey"), col("o_totalprice"),
           coalesce(col("qty"), lit(0d)).as("qty"),
           coalesce(col("n_lines"), lit(0L)).as("n_lines"))
-        .canonOrder(col("okey"))
     },
 
     // J3: join on a non-key attribute (reference joins tokens by denom,
@@ -141,7 +134,6 @@ object Relational {
         .groupBy(col("s_nationkey").as("nationkey"))
         .agg(count(lit(1)).as("pairs"),
           xsum(col("c_acctbal") + col("s_acctbal"), dp = 2).as("bal"))
-        .canonOrder(col("nationkey"))
     },
 
     // J4: lateral-top-1, hand-decorrelated into latestSnapshot +
@@ -157,7 +149,6 @@ object Relational {
       Tables.customer(s, d)
         .join(latest, col("c_custkey") === col("user_id"), "left")
         .select(col("c_custkey").as("custkey"), col("last_value"))
-        .canonOrder(col("custkey"))
     },
 
     // J5: the correlated scalar subquery ITSELF, through the SQL surface
@@ -174,7 +165,6 @@ object Relational {
             (SELECT max_by(value, event_id) FROM j5_events e
              WHERE e.user_id = c.c_custkey) AS last_value
           FROM j5_customer c""")
-        .canonOrder(col("custkey"))
     },
 
     // J6: semi-join via EXISTS (jobs/alerts.js:53-56).
@@ -183,7 +173,6 @@ object Relational {
         .join(Tables.orders(s, d).filter(col("o_totalprice") > 100000d),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))
-        .canonOrder(col("c_custkey"))
     },
 
     // J7: composite-key equi join (api/routes/trades.js:893).
@@ -197,7 +186,6 @@ object Relational {
       daily.join(totals, Seq("user_id", "event_type"))
         .select(col("user_id"), col("event_type"), col("day_sec"),
           col("n"), col("total"))
-        .canonOrder(col("user_id"), col("event_type"), col("day_sec"))
     },
 
     // J8: USING-style join of two aggregates on the shared bucket key
@@ -212,7 +200,6 @@ object Relational {
       a.join(b, Seq("bucket_ts"), "left")
         .select(col("bucket_ts"), col("n"),
           coalesce(col("buyers"), lit(0L)).as("buyers"))
-        .canonOrder(col("bucket_ts"))
     },
 
     // J9: 1×1 cross join of two single-row aggregates — %-change
@@ -256,7 +243,6 @@ object Relational {
           col("event_id"), col("value"),
           col("click_id"), unix_micros(col("click_ts")).as("click_ts_us"),
           col("click_value"))
-        .canonOrder(col("event_id"))
     },
 
     // J11b: forward as-of — the FIRST click at-or-after each purchase
@@ -277,7 +263,6 @@ object Relational {
           col("event_id"), col("value"),
           col("click_id"), unix_micros(col("click_ts")).as("click_ts_us"),
           col("click_value"))
-        .canonOrder(col("event_id"))
     },
 
     // J14: the as-of join through its SQL TABLE-function surface — j11's
@@ -327,7 +312,6 @@ object Relational {
       p.join(counts, Seq("event_id"), "left")
         .select(col("event_id"), col("ts_us"),
           coalesce(col("n"), lit(0L)).as("n_clicks"))
-        .canonOrder(col("event_id"))
     },
 
     // W7: gap-based sessionization — split each user's event stream at
@@ -350,7 +334,6 @@ object Relational {
         .groupBy(col("user_id"), col("session_seq"))
         .agg(count(lit(1)).as("n_events"),
           min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"))
-        .canonOrder(col("user_id"), col("session_seq"))
     },
 
     // J13: anti join — entities with NO matching facts (customers that
@@ -362,7 +345,6 @@ object Relational {
         .join(Tables.orders(s, d).select(col("o_custkey")),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
-        .canonOrder(col("c_custkey"))
     },
 
     // W9: quartile assignment (ntile) of account balance WITHIN market
@@ -376,7 +358,6 @@ object Relational {
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
           ntile(4).over(w).cast("long").as("quartile"))
-        .canonOrder(col("c_custkey"))
     },
 
     // O1: dynamic sort + LIMIT/OFFSET pagination with total-order tiebreak
@@ -424,7 +405,6 @@ object Relational {
           .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal")),
         Seq("c_nationkey"),
         Seq(col("c_acctbal").desc, col("c_custkey")), k = 3)
-        .canonOrder(col("c_nationkey"), col("c_acctbal").desc, col("c_custkey"))
     },
 
     // O8: the skew-safe two-stage form of o7 — same answer (the oracle
@@ -440,7 +420,6 @@ object Relational {
         Seq("c_nationkey"),
         Seq(col("c_acctbal").desc, col("c_custkey")), k = 3,
         saltBuckets = 8)
-        .canonOrder(col("c_nationkey"), col("c_acctbal").desc, col("c_custkey"))
     },
 
     // O6: router-leg combine — exact groupBy instead of the reference's
@@ -453,7 +432,6 @@ object Relational {
           earliestBy(col("event_type"), col("event_id")).as("first_type"),
           latestBy(col("event_type"), col("event_id")).as("last_type"))
         .filter(col("legs") > 1)
-        .canonOrder(col("user_id"), col("bucket_ts"))
     },
 
     // U1: UNION ALL of two filtered branches then aggregate
@@ -467,7 +445,6 @@ object Relational {
       a.unionByName(b)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), xsum(col("value"), dp = 2).as("v"))
-        .canonOrder(col("user_id"))
     },
 
     // S2: tx-hash derivation — upper-hex sha256 of the base64-DECODED tx
@@ -478,14 +455,12 @@ object Relational {
       val wireB64 = base64(col("text").cast("binary"))
       Tables.documents(s, d)
         .select(col("doc_id"), txHash(unbase64(wireB64)).as("tx_hash"))
-        .canonOrder(col("doc_id"))
     },
 
     // S8: dedup-on-write key projection (core/block-processor.js:64-76).
     "s8_dedup_keys" -> { (s, d) =>
       Tables.events(s, d)
         .select(col("user_id"), col("event_type")).distinct()
-        .canonOrder(col("user_id"), col("event_type"))
     },
 
     // S10/W1/W2: keep-latest dedupe via row_number window
@@ -494,7 +469,6 @@ object Relational {
       dedupeKeepLatest(Tables.events(s, d),
         Seq("user_id", "event_type"), col("event_id"))
         .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
-        .canonOrder(col("user_id"), col("event_type"))
     },
 
     // W2: DISTINCT ON (keys) ORDER BY ord DESC — same keep-latest
@@ -506,7 +480,6 @@ object Relational {
           .withColumn("day", bucketSec(col("ts"), 86400L)),
         Seq("user_id", "day"), col("event_id"))
         .select(col("user_id"), col("day"), col("event_id"), col("value"))
-        .canonOrder(col("user_id"), col("day"))
     },
 
     // §1.2 hard spot: NUMERIC(78,0) raw on-chain amounts → Decimal(38,0)
@@ -527,7 +500,6 @@ object Relational {
           (base === base.cast("string")
             .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
             .as("round_trip_ok"))
-        .canonOrder(col("o_orderkey"))
     },
 
     // W3/A13: total count alongside a page (api/routes/tokens.js:224-229).
@@ -550,14 +522,12 @@ object Relational {
         .groupBy(col("user_id"))
         .agg(earliestBy(col("value"), col("event_id")).as("first_v"),
           latestBy(col("value"), col("event_id")).as("last_v"))
-        .canonOrder(col("user_id"))
     },
 
     // (r11 ran a zz_order_probe diagnostic here — Spark ASC vs oracle
     // DESC on the same 25 nation rows. It HASH-MATCHED in
     // CORRECTNESS_r11, proving the driver's compare is row-order-
-    // insensitive; the probe is retired and graft.canon.sort now
-    // defaults OFF — see functions.Core.canonSort.),
+    // insensitive, so no query sorts unless the order is its answer.)
   )
 
 

@@ -54,7 +54,6 @@ object TimeSeries {
           countIf(buy).as("tx_buy"),
           countIf(!buy).as("tx_sell"),
           count_distinct(col("user_id")).as("unique_traders"))
-        .canonOrder(col("event_type"))
     },
 
     // A2: exact distinct count per window (jobs/matrix-rollups.js:37).
@@ -63,7 +62,6 @@ object TimeSeries {
         .groupBy(bucketSec(col("ts"), 86400L).as("day"))
         .agg(count_distinct(col("user_id")).as("uniq_users"),
           count(lit(1)).as("n"))
-        .canonOrder(col("day"))
     },
 
     // A2 scale path: HLL approx distinct, made oracle-hashable by
@@ -83,7 +81,6 @@ object TimeSeries {
         .select(col("event_type"), col("exact_users"),
           (abs(col("approx_users") - col("exact_users"))
             <= col("exact_users").cast("double") * 0.05).as("approx_ok"))
-        .canonOrder(col("event_type"))
     },
 
     // A3: argMax — latest value per key (jobs/matrix-rollups.js:48).
@@ -92,7 +89,6 @@ object TimeSeries {
         .groupBy(col("user_id"))
         .agg(latestBy(col("value"), col("event_id")).as("last_value"),
           max(col("event_id")).as("last_event"))
-        .canonOrder(col("user_id"))
     },
 
     // A4: argMin (api/routes/tokens.js:1460-1465).
@@ -101,12 +97,11 @@ object TimeSeries {
         .groupBy(col("user_id"))
         .agg(earliestBy(col("value"), col("event_id")).as("first_value"),
           min(col("event_id")).as("first_event"))
-        .canonOrder(col("user_id"))
     },
 
     // A5: OHLCV candle build (core/ohlcv.js:32-62) — single hash aggregate.
     "a5_ohlcv_build" -> { (s, d) =>
-      hourly(s, d).canonOrder(col("event_type"), col("bucket_ts"))
+      hourly(s, d)
     },
 
     // A6: candle resample 1h→6h (api/routes/tokens.js:1429-1488).
@@ -114,7 +109,6 @@ object TimeSeries {
     // invariant (FIXTURES.md), which OhlcvSpec property-tests.
     "a6_ohlcv_resample" -> { (s, d) =>
       Ohlcv.resample(hourly(s, d), Seq("event_type"), 21600L)
-        .canonOrder(col("event_type"), col("bucket_ts"))
     },
 
     // A6 chain: 1h→6h→24h double resample ≡ direct 24h aggregation — the
@@ -126,7 +120,6 @@ object TimeSeries {
       Ohlcv.resample(
         Ohlcv.resample(hourly(s, d), Seq("event_type"), 21600L),
         Seq("event_type"), 86400L)
-        .canonOrder(col("event_type"), col("bucket_ts"))
     },
 
     // A7: cross-pool (here cross-type) union → one series
@@ -136,7 +129,6 @@ object TimeSeries {
         Tables.events(s, d)
           .filter(col("event_type").isin("purchase", "click")),
         Seq.empty, col("ts"), col("event_id"), col("value"), col("value"), 21600L)
-        .canonOrder(col("bucket_ts"))
     },
 
     // A8: trader leaderboard (jobs/leaderboards.js:63-83).
@@ -148,7 +140,6 @@ object TimeSeries {
           xsum(col("value"), dp = 2).as("volume"),
           xsum(when(col("event_type") === "purchase", col("value"))
             .otherwise(-col("value")), dp = 2).as("gross_pnl"))
-        .canonOrder(col("user_id"))
     },
 
     // A9: large-trade screen — value rows against the latest per-key price
@@ -164,7 +155,6 @@ object TimeSeries {
         .withColumn("worth", round4(col("value") * col("px")))
         .filter(col("worth") >= 5000d)
         .select(col("event_id"), col("user_id"), col("worth"))
-        .canonOrder(col("event_id"))
     },
 
     // A10: TVL-style coalesce over a price-source fallback chain
@@ -183,7 +173,6 @@ object TimeSeries {
           (xsum(col("value"), dp = 2) / count(col("value"))).as("p3"))
         .select(col("user_id"),
           round4(coalesce(col("p1"), col("p2"), col("p3"))).as("price"))
-        .canonOrder(col("user_id"))
     },
 
     // A12: top-10 concentration — window rank + conditional share
@@ -200,7 +189,6 @@ object TimeSeries {
           xsum(col("c_acctbal"), dp = 2).as("total_bal"))
         .withColumn("top10_pct",
           round4(col("top10_bal") / col("total_bal") * 100d))
-        .canonOrder(col("nationkey"))
     },
 
     // A14: multi-window rollup in ONE pass — conditional windows instead of
@@ -222,7 +210,6 @@ object TimeSeries {
           countIf(win(1)).as("tx_1d"),
           countIf(win(7)).as("tx_7d"),
           countIf(win(30)).as("tx_30d"))
-        .canonOrder(col("event_type"))
     },
 
     // A20: rolling unique users via MERGEABLE HLL sketches — the 100 TB
@@ -275,7 +262,6 @@ object TimeSeries {
         .select(col("event_type"), col("day"), col("exact_uniques"),
           (abs(col("est_uniques") - col("exact_uniques"))
             <= col("exact_uniques").cast("double") * 0.05).as("hll_ok"))
-        .canonOrder(col("event_type"), col("day"))
     },
 
     // A21: approximate percentile sketch (Greenwald-Khanna, Spark's
@@ -306,7 +292,6 @@ object TimeSeries {
         .select(col("event_type"), col("n"),
           rankOk(0.5, col("lt50"), col("le50"), col("n")).as("p50_ok"),
           rankOk(0.9, col("lt90"), col("le90"), col("n")).as("p90_ok"))
-        .canonOrder(col("event_type"))
     },
 
     // A22: skew-safe two-stage aggregation on the oracle surface — the
@@ -329,7 +314,6 @@ object TimeSeries {
           ("hi", max(col("value")), (c: Column) => max(c))))
         .select(col("event_type"), col("vol").cast("double").as("vol"),
           col("n").cast("long").as("n"), col("hi").as("hi"))
-        .canonOrder(col("event_type"))
     },
 
     // A23: heavy hitters via the native Misra–Gries mergeable aggregate
@@ -369,7 +353,6 @@ object TimeSeries {
         .agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") * 100L > col("n_type"))
         .select(col("event_type"), col("user_id"), col("cnt"), col("n_type"))
-        .canonOrder(col("event_type"), col("user_id"))
     },
 
     // A24: audience-overlap matrix via mergeable HLL sketches — |A∩B|
@@ -405,7 +388,6 @@ object TimeSeries {
           (abs(col("est_overlap") - col("overlap"))
             <= greatest(lit(16d),
               col("overlap").cast("double") * 0.05)).as("hll_ok"))
-        .canonOrder(col("type_a"), col("type_b"))
     },
 
     // A15: first-seen timestamps (jobs/token-security.js:89-99).
@@ -414,7 +396,6 @@ object TimeSeries {
         .groupBy(col("user_id"))
         .agg(epochSec(min(col("ts"))).as("first_seen"),
           min(col("event_id")).as("first_event"))
-        .canonOrder(col("user_id"))
     },
 
     // A16: windowed average fallback price (jobs/matrix-rollups.js:256-265).
@@ -422,7 +403,6 @@ object TimeSeries {
       Tables.eventsWithin(s, d, 86400L)
         .groupBy(col("event_type"))
         .agg(round4(xsum(col("value"), dp = 2) / count(col("value"))).as("avg_value"))
-        .canonOrder(col("event_type"))
     },
 
     // A17: exact percentiles per group — the distribution read behind
@@ -436,7 +416,6 @@ object TimeSeries {
           round4(expr("percentile(value, 0.25)")).as("p25"),
           round4(expr("percentile(value, 0.5)")).as("p50"),
           round4(expr("percentile(value, 0.75)")).as("p75"))
-        .canonOrder(col("event_type"))
     },
 
     // W8: 6-hour moving average over the hourly value series — RANGE
@@ -456,7 +435,6 @@ object TimeSeries {
       h.select(col("event_type"), col("b"),
           round4(sum(col("v").cast(DecimalType(38, 6))).over(w)
             .cast("double") / count(col("v")).over(w)).as("ma6h"))
-        .canonOrder(col("event_type"), col("b"))
     },
 
     // W10: trailing-interval RANGE window over RAW event times — per
@@ -478,7 +456,6 @@ object TimeSeries {
           count(lit(1)).over(w).as("n_10m"),
           max(col("value")).over(w).as("max_10m"),
           min(col("value")).over(w).as("min_10m"))
-        .canonOrder(col("event_id"))
     },
 
     // A18: hierarchical rollup — per (event_type, user bucket), per
@@ -493,7 +470,6 @@ object TimeSeries {
         .agg(count(lit(1)).as("n"),
           expr("grouping_id()").cast("long").as("g"))
         .select(col("g"), col("event_type"), col("u3"), col("n"))
-        .canonOrder(col("g"), col("event_type"), col("u3"))
     },
 
     // A19: full cube — all four grouping combinations of (event_type,
@@ -505,14 +481,12 @@ object TimeSeries {
         .agg(count(lit(1)).as("n"),
           expr("grouping_id()").cast("long").as("g"))
         .select(col("g"), col("event_type"), col("u3"), col("n"))
-        .canonOrder(col("g"), col("event_type"), col("u3"))
     },
 
     // W5/T5: prev-close continuity via lag (core/ohlcv.js:121-154).
     "w5_prev_close_carry" -> { (s, d) =>
       Ohlcv.withPrevCloseOpen(hourly(s, d), Seq("event_type"))
         .select(col("event_type"), col("bucket_ts"), col("open"), col("close"))
-        .canonOrder(col("event_type"), col("bucket_ts"))
     },
 
     // W6: % change over N: last close vs close as-of cutoff
@@ -522,7 +496,6 @@ object TimeSeries {
       Ohlcv.pctChange(hourly(s, d), Seq("event_type"), cut)
         .select(col("event_type"), col("last_close"), col("prev_close"),
           col("change_pct"))
-        .canonOrder(col("event_type"))
     },
 
     // O5: gainers — order by computed change desc (api/routes/tokens.js:320-416).
@@ -530,7 +503,6 @@ object TimeSeries {
       val cut = litOrNull(lastHour(s, d).map(_ - 7L * 86400L))
       Ohlcv.pctChange(hourly(s, d), Seq("event_type"), cut)
         .select(col("event_type"), col("change_pct"))
-        .canonOrder(col("change_pct").desc, col("event_type"))
     },
 
     // W11/T9: WS forming-bar synthesis (api/ws.js:84-91,128-140) — the
@@ -544,7 +516,6 @@ object TimeSeries {
       val h = hourly(s, d)
       Ohlcv.withFormingBar(if (now.isEmpty) h.filter(lit(false)) else h,
         Seq("event_type"), 21600L, now.getOrElse(0L))
-        .canonOrder(col("event_type"), col("bucket_ts"))
     },
 
     // Gap fill: sequence+explode spine, prev-fill carry
@@ -555,7 +526,6 @@ object TimeSeries {
         Seq("event_type"), 3600L, mode = "prev")
         .select(col("event_type"), col("bucket_ts"), col("open"),
           col("close"), col("volume"), col("trade_count"))
-        .canonOrder(col("bucket_ts"))
     }
   )
 

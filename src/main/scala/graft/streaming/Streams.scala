@@ -72,18 +72,8 @@ object Streams {
               "Land one file first, or pass tsTypeIfEmpty to pin the " +
               "producer's known type explicitly.", e))
       }
-    probed match {
-      case LongType =>
-        spark.readStream
-          .schema(eventsSchema(LongType))
-          .parquet(landingDir)
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case t =>
-        spark.readStream
-          .schema(eventsSchema(t))
-          .parquet(landingDir)
-          .withColumn("ts", col("ts").cast(TimestampType))
-    }
+    graft.Tables.normTs(
+      spark.readStream.schema(eventsSchema(probed)).parquet(landingDir), "ts")
   }
 
   /** T4: exactly-once-ish key dedup, the streaming twin of the existence

@@ -211,8 +211,6 @@ object Ab {
       "usage: Ab <sfDir> <passes> [query[~variant][@key=value,...]...]")
     val specs = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // deployment shape, like Bench: no oracle-canonicalization sorts
-    System.setProperty("graft.canon.sort", "false")
     val spark = Tune.localSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try {

@@ -24,7 +24,6 @@ object ExplainDump {
       else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tune.localSession(cpus.toInt)
-    System.setProperty("graft.canon.sort", "false")
     Tune.applyShuffleWidth(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>

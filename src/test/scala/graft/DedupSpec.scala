@@ -236,9 +236,9 @@ class DedupSpec extends AnyFunSuite {
   test("r16 driver-local CC gate ≡ the distributed min-label loop") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    // a non-null log hook forces the distributed loop (the audit path);
     // the default route takes the driver-local union-find below the
-    // edge bound — both must land the identical component-min fixpoint
+    // edge bound; minLabelComponents is the distributed loop it takes
+    // above it — both must land the identical component-min fixpoint
     val edgeGen = for {
       n <- Gen.choose(1, 40)
       es <- Gen.listOfN(n, Gen.zip(Gen.choose(0L, 25L), Gen.choose(0L, 25L)))
@@ -249,7 +249,7 @@ class DedupSpec extends AnyFunSuite {
         val df = edges.toDF("doc_a", "doc_b")
         val local = Dedup.connectedComponents(df)
           .as[(Long, Long)].collect().toMap
-        val dist = Dedup.connectedComponentsLogged(df, _ => ())
+        val dist = Dedup.minLabelComponents(Dedup.symmetricEdges(df))
           .as[(Long, Long)].collect().toMap
         assert(local == dist, s"edges: $edges")
       }

@@ -376,6 +376,32 @@ class PlanLintSpec extends AnyFunSuite {
     } finally saves.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("engine code reads no JVM property or environment variable") {
+    // No measurement-only knob is read from engine code: the
+    // mains that take their settings from the environment (Bench,
+    // Scaling, Verify, tools/) are the only readers.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val skipped = Set("Bench.scala", "Scaling.scala", "Verify.scala")
+    val reads = "sys\\.props|System\\.getProperty|sys\\.env|System\\.getenv".r
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.toList finally w.close()
+    }.filter(_.toString.endsWith(".scala"))
+      .map(f => f -> root.relativize(f).toString)
+      .filterNot { case (_, rel) =>
+        rel.startsWith("tools/") || skipped(rel) }
+    assert(files.size > 30, s"scanned only ${files.size} files")
+    val found = files.flatMap { case (f, rel) =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if reads.findFirstIn(line).isDefined =>
+          s"$rel:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(found.isEmpty, "\n" + found.mkString("\n"))
+  }
+
   test("no query plan carries an unjustified scale anti-pattern") {
     val found = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, q) =>

@@ -8,7 +8,8 @@ import graft.plans.HeavyHittersAgg.heavyHitters
 import graft.plans.MgBuffer
 
 /** The mergeable-sketch battery behind a23 (Misra–Gries heavy hitters)
-  * and a24 (HLL set overlap): the guarantees the oracle entries rely on,
+  * and a24 (HLL set overlap), and the bloom prune behind b5/b9/b17/d12:
+  * the guarantees the oracle entries rely on,
   * pinned on data far more adversarial than the uniform fixtures.
   */
 class SketchSpec extends AnyFunSuite {
@@ -162,5 +163,24 @@ class SketchSpec extends AnyFunSuite {
       .head.getDouble(0)
     assert(math.abs(est - 150d) <= 150d * 0.05 + 16d,
       s"overlap estimate $est outside a24's bound around 150")
+  }
+
+  test("bloomPrune keeps every row whose key is in the key set, and the " +
+      "pruned join equals the plain join") {
+    val big = (0L until 5000L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartition(4)
+    // every 7th id, half of them beyond big's range; 10 bits per key
+    val keys = (0L until 10000L by 7L).toDF("key")
+    val nk = keys.count()
+    val pruned = graft.plans.Expressions
+      .bloomPrune(big, col("k"), keys, nk, 10L * nk)
+    val kept = pruned.select(col("k")).as[Long].collect().toSet
+    val inKeys = (0L until 5000L by 7L).toSet
+    assert(inKeys.subsetOf(kept), s"false negatives: ${inKeys -- kept}")
+    assert(kept.size < 1000, s"the bloom pruned too little: ${kept.size}")
+    def joined(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.join(keys, col("k") === col("key")).select(col("k"), col("v"))
+        .as[(Long, String)].collect().toSeq.sorted
+    assert(joined(pruned) == joined(big))
   }
 }
