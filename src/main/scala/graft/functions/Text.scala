@@ -36,7 +36,7 @@ object Text {
   def words(c: Column): Column = split(normalize(c), " ")
 
   /** Word n-gram shingles, space-joined, in document order (may repeat).
-    * Native kernel expression — see graft.plans.ShinglesExpr for why not
+    * Native kernel call — see graft.plans.ShingleKernel for why not
     * transform∘slice∘concat_ws (interpreted HOFs).
     */
   def shingles(c: Column, n: Int): Column =
@@ -55,7 +55,7 @@ object Text {
     * the shingle pipeline k times after projection collapse (267 s at
     * sf0.01); a single array-accumulator aggregate fixed that but still
     * ran as interpreted higher-order lambdas (~30 s at sf0.1). Now a
-    * native expression (graft.plans.MinHashSigExpr): one xxhash64 per
+    * native kernel (graft.plans.MinHashKernel): one xxhash64 per
     * shingle + k splitmix mixes in a primitive JVM loop, codegen-callable.
     */
   def minhashSig(shingleSet: Column, k: Int): Column =

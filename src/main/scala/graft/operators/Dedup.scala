@@ -878,7 +878,7 @@ object Dedup {
         // by chunk_fp, so collect_list(doc_id) per fp aggregates WITHOUT
         // a new exchange — groups are ≤ cap docs by the window filter,
         // so the aggregation state is bounded — and the codegen'd
-        // PairCombosExpr kernel emits each group's C(occ,2) ≤ C(cap,2)
+        // PairCombosKernel emits each group's C(occ,2) ≤ C(cap,2)
         // pairs directly (sorted ids → deterministic (a < b) pairs under
         // any collect order). The only corpus-scale shuffles left are
         // the distinct, the window, and the final per-pair count — each

@@ -33,7 +33,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
   * Bit-identity is the whole game; every operation replays the exact
   * engine semantics of the distributed chain:
   *  - dot/norm: Σ floor(a_i·b_i·1e16) as Long over min(len) —
-  *    [[graft.plans.DotScaledExpr]] verbatim.
+  *    [[graft.plans.DotScaledKernel]] verbatim.
   *  - cosine: dot.toDouble / (sqrt(na.toDouble) · sqrt(nb.toDouble)) —
   *    [[Similarity.cosineFromScaled]]'s IEEE operation order.
   *  - argmin over struct(key, id): Spark's double ordering
@@ -47,7 +47,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
   */
 object LocalTrain {
 
-  /** Σ floor(a_i·b_i·1e16) as Long over min(len) — DotScaledExpr. */
+  /** Σ floor(a_i·b_i·1e16) as Long over min(len) — DotScaledKernel. */
   def dotScaled(a: Array[Float], b: Array[Float]): Long = {
     val n = math.min(a.length, b.length)
     var s = 0L

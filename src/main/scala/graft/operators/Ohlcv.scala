@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Core._
@@ -64,17 +64,22 @@ object Ohlcv {
     * argmin/argmax over the same total order (bucket_ts is unique per
     * series in candle frames).
     */
-  def resample(candles: DataFrame, keys: Seq[String], stepSec: Long): DataFrame = {
-    candles
-      .groupBy((keys.map(col) :+ rebucket(col("bucket_ts"), stepSec).as("bucket_ts")): _*)
-      .agg(
-        earliestBy(col("open"), col("bucket_ts")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        latestBy(col("close"), col("bucket_ts")).as("close"),
-        dsum(col("volume")).as("volume"),
-        sum(col("trade_count")).as("trade_count"))
-  }
+  def resample(candles: DataFrame, keys: Seq[String], stepSec: Long): DataFrame =
+    rollUp(candles.groupBy(
+      (keys.map(col) :+ rebucket(col("bucket_ts"), stepSec).as("bucket_ts")): _*))
+
+  /** The six aggregates that roll finer candles up into one bar: open and
+    * close by earliest/latest bucket_ts, high/low extremes, exact volume
+    * and trade-count sums.
+    */
+  private def rollUp(g: RelationalGroupedDataset): DataFrame =
+    g.agg(
+      earliestBy(col("open"), col("bucket_ts")).as("open"),
+      max(col("high")).as("high"),
+      min(col("low")).as("low"),
+      latestBy(col("close"), col("bucket_ts")).as("close"),
+      dsum(col("volume")).as("volume"),
+      sum(col("trade_count")).as("trade_count"))
 
   /** T9 forming-bar synthesis (reference api/ws.js:84-91,128-140): the WS
     * serving loop sends closed TF bars plus ONE bar for the not-yet-closed
@@ -94,19 +99,11 @@ object Ohlcv {
     val closed = resample(
       fine.filter(col("bucket_ts") < formingStart), keys, stepSec)
       .withColumn("forming", lit(false))
-    val forming = fine.filter(col("bucket_ts") >= formingStart)
-      .groupBy(kc: _*)
-      .agg(
-        earliestBy(col("open"), col("bucket_ts")).as("o"),
-        max(col("high")).as("h"),
-        min(col("low")).as("l"),
-        latestBy(col("close"), col("bucket_ts")).as("close"),
-        dsum(col("volume")).as("volume"),
-        sum(col("trade_count")).as("trade_count"))
-      .select((kc :+ lit(formingStart).as("bucket_ts") :+
-        col("o").as("open") :+
-        greatest(col("h"), col("o")).as("high") :+
-        least(col("l"), col("o")).as("low") :+
+    val forming = rollUp(fine.filter(col("bucket_ts") >= formingStart)
+        .groupBy(kc: _*))
+      .select((kc :+ lit(formingStart).as("bucket_ts") :+ col("open") :+
+        greatest(col("high"), col("open")).as("high") :+
+        least(col("low"), col("open")).as("low") :+
         col("close") :+ col("volume") :+ col("trade_count") :+
         lit(true).as("forming")): _*)
     closed.unionByName(forming)

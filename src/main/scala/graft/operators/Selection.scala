@@ -51,7 +51,7 @@ object Selection {
     * md5 nibbles (16 bits) feed the modulus, so nBuckets must divide
     * 65536 or buckets would be biased/unreachable. r17: the
     * `conv(substring(md5(c),1,4),16,10) % n` chain runs as ONE fused
-    * codegen kernel (plans.Md5BucketExpr — bit-equivalent, no per-row
+    * codegen kernel (plans.Md5BucketKernel — bit-equivalent, no per-row
     * digest/hex/parse allocations; the chain was the dominant t29
     * kernel at every decade). The DuckDB twins still replay the
     * substring(md5(...)) form verbatim; SelectionSpec pins kernel ≡

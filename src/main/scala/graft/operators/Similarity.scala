@@ -22,7 +22,7 @@ import graft.functions.Core._
 object Similarity extends SimilarityPq {
 
   /** Σ floor(a[i]·b[i]·1e16) as LONG (order-independent exact integer).
-    * Backed by the codegen'd [[graft.plans.DotScaledExpr]] — the lambda
+    * Backed by the codegen'd [[graft.plans.DotScaledKernel]] — the lambda
     * form (aggregate ∘ zip_with) is interpreted by Spark and was the
     * whole cost of the brute-force pair scorer at sf0.1.
     */
@@ -218,7 +218,7 @@ object Similarity extends SimilarityPq {
 
   /** LSH bucket codes: `tables` independent codes of `bits` sign-bits
     * each, as array<long> indexed by table — computed map-side per row by
-    * the codegen'd [[graft.plans.LshCodesExpr]] kernel (the Column form —
+    * the codegen'd [[graft.plans.LshKernel]] (the Column form —
     * tables×bits aggregate∘zip_with lambdas against a ±1 splitmix64
     * weight literal — is interpreted by Spark; same trap as the cosine).
     * Codes are bit-identical to the retired lambda form: same seeded

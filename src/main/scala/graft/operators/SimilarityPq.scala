@@ -144,7 +144,7 @@ trait SimilarityPq { this: Similarity.type =>
       if (dense) sorted.map(a => Array.tabulate(a.length)(_.toLong))
       else sorted.map(_.map(_._1)),
       sorted.map(_.map(_._2)),
-      // normScaled replayed in the DotScaledExpr math: Σ floor(w²·1e16)
+      // normScaled replayed in the DotScaledKernel math: Σ floor(w²·1e16)
       sorted.map(_.map { case (_, w) =>
         w.map(x => math.floor(x.toDouble * x.toDouble * 1e16).toLong).sum
       }))

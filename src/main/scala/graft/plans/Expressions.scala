@@ -2,10 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+import org.apache.spark.sql.catalyst.expressions.{Expression,
   GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -15,22 +13,16 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * (see operators/Similarity: integer accumulation makes the result
   * independent of order and bit-identical across engines).
   *
-  * Implemented as a native Catalyst expression WITH doGenCode: the
-  * Column-API form (aggregate ∘ zip_with lambdas) is a higher-order
-  * function, which Spark always interprets — at sf0.1 the 12.5M-pair
-  * brute-force scorer spent 74 s in lambda interpretation. This codegen
-  * loop runs inside whole-stage codegen like any built-in, cutting the
-  * same query to a few seconds. Semantics are identical to the lambda
-  * form (floor of each double product, long sum).
+  * A JVM loop, not the Column-API form (aggregate ∘ zip_with lambdas):
+  * that is a higher-order function, which Spark always interprets — at
+  * sf0.1 the 12.5M-pair brute-force scorer spent 74 s in lambda
+  * interpretation. Called through [[Expressions.dotScaled]], this loop
+  * runs inside whole-stage codegen like any built-in, cutting the same
+  * query to a few seconds. Semantics are identical to the lambda form
+  * (floor of each double product, long sum).
   */
-case class DotScaledExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object DotScaledKernel {
+  def dot(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0L
     var i = 0
@@ -41,35 +33,13 @@ case class DotScaledExpr(left: Expression, right: Expression)
     }
     s
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        long $s = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += (long) java.lang.Math.floor(
-            ((double) $a.getFloat($i)) * ((double) $b.getFloat($i)) * 1.0E16);
-        }
-        ${ev.value} = $s;
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotScaledExpr =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "dot_scaled"
 }
 
 /** JVM kernel for MinHash signatures: ONE xxhash64 of each shingle's
   * bytes, then k splitmix64 finalizer mixes — instead of k full string
-  * hashes per shingle (the seeded-xxhash64 lambda family). Called from
-  * both interpreted eval and generated code, so the per-row cost is one
-  * JVM call with a tight primitive loop either way.
+  * hashes per shingle (the seeded-xxhash64 lambda family). Generated and
+  * interpreted evaluation both make the same one call, so the per-row
+  * cost is one JVM call with a tight primitive loop either way.
   */
 object MinHashKernel {
   private final val GOLDEN = 0x9e3779b97f4a7c15L
@@ -102,35 +72,6 @@ object MinHashKernel {
   }
 }
 
-/** MinHash signature of a shingle-set column (array<string> → array<long>
-  * of k per-permutation minima), backed by [[MinHashKernel]].
-  */
-case class MinHashSigExpr(child: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  // Scalar args arrive unvalidated from the SQL registration — reject at
-  // analysis time, not with an ArrayIndexOutOfBounds mid-job.
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (k < 1) TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig: k must be >= 1, got $k")
-    else super.checkInputDataTypes()
-
-  override def nullSafeEval(a: Any): Any =
-    MinHashKernel.sig(a.asInstanceOf[ArrayData], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.MinHashKernel.sig($a, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSigExpr = copy(child = newChild)
-
-  override def prettyName: String = "minhash_sig"
-}
-
 /** Kernel for word-n-gram shingling of raw text: lower/trim/split on
   * whitespace runs, join n-grams with single spaces, optionally distinct
   * (first-occurrence order, matching array_distinct). Semantics mirror
@@ -148,7 +89,7 @@ case class MinHashSigExpr(child: Expression, k: Int)
   */
 object ShingleKernel {
   // precompiled: this kernel runs once per corpus row from the codegen'd
-  // expression — String.replaceAll/split(regex) would Pattern.compile
+  // call — String.replaceAll/split(regex) would Pattern.compile
   // (plus re-scan) on EVERY row
   private val EdgeWs = java.util.regex.Pattern
     .compile("^[ \\t\\n\\x0B\\f\\r]+|[ \\t\\n\\x0B\\f\\r]+$")
@@ -193,35 +134,6 @@ object ShingleKernel {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       out.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any])
   }
-}
-
-/** Shingles of a text column as a native expression (the Column-API form
-  * — transform ∘ sequence ∘ slice ∘ concat_ws — is interpreted and was
-  * the shared bottleneck of every shingle-based query at sf0.1).
-  */
-case class ShinglesExpr(child: Expression, n: Int, distinct: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (n < 1) TypeCheckResult.TypeCheckFailure(
-      s"shingles: n must be >= 1, got $n")
-    else super.checkInputDataTypes()
-
-  override def nullSafeEval(a: Any): Any =
-    ShingleKernel.shingles(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, distinct)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.ShingleKernel.shingles($a, $n, $distinct);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : ShinglesExpr = copy(child = newChild)
-
-  override def prettyName: String = "shingles"
 }
 
 /** Kernel for FUSED shingle hashing: `xxhash64(shingle)` for every word
@@ -312,45 +224,7 @@ object ShingleHashKernel {
   }
 }
 
-/** Fused `transform(shingles(text, n), s -> xxhash64(s))` as one native
-  * expression — see [[ShingleHashKernel]] for the zero-per-gram-
-  * allocation argument. Output: array<long>, positions = array index
-  * (posexplode replays the positional-gram shape).
-  */
-case class ShingleHashesExpr(child: Expression, n: Int, stride: Int = 1)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (n < 1 || stride < 1) TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes: n and stride must be >= 1, got n=$n stride=$stride")
-    else super.checkInputDataTypes()
-
-  // like NormalizeTextExpr: the ICU flag resolves at plan build, so
-  // executors never consult SQLConf
-  private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf
-    .get.getConf(org.apache.spark.sql.internal.SQLConf
-      .ICU_CASE_MAPPINGS_ENABLED)
-
-  override def nullSafeEval(a: Any): Any =
-    ShingleHashKernel.hashes(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, stride,
-      useICU)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.ShingleHashKernel.hashes(" +
-        s"$a, $n, $stride, $useICU);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : ShingleHashesExpr = copy(child = newChild)
-
-  override def prettyName: String = "shingle_hashes"
-}
-
-/** Driver-side packed PQ codebook for [[PqAssignExpr]]: per subspace the
+/** Driver-side packed PQ codebook for [[PqAssignKernel]]: per subspace the
   * code ids ASCENDING (the tie order), their codewords (jagged — a seed
   * codeword sliced from a truncated vector can be shorter than `sub`,
   * and dotScaled truncates at the shorter operand), and their
@@ -373,7 +247,7 @@ case class PqAssignBook(m: Int, sub: Int,
 
   // case-class equality over nested Arrays degrades to reference
   // identity, which would defeat expression canonicalization /
-  // subexpression elimination on two logically identical PqAssignExprs
+  // subexpression elimination on two logically identical pq_assign calls
   // (r15 advice) — compare and hash by CONTENT
   override def equals(other: Any): Boolean = other match {
     case o: PqAssignBook =>
@@ -406,7 +280,7 @@ case class PqAssignBook(m: Int, sub: Int,
   *
   * Bit-identity with [[graft.operators.SimilarityPq]]'s pqAssign:
   * same scaled-long floors (floor(a·b·1e16) per element, the
-  * DotScaledExpr math), same d2 = normScaled(cw) − 2·dotScaled(sv, cw),
+  * DotScaledKernel math), same d2 = normScaled(cw) − 2·dotScaled(sv, cw),
   * same (d2, code) total order (codes scanned ascending, strict <
   * keeps the lowest code at ties), same truncation semantics for
   * short vectors/codewords. Pinned in SimilaritySpec.
@@ -446,34 +320,7 @@ object PqAssignKernel {
   }
 }
 
-/** PQ code assignment of an embedding column against a driver-collected
-  * codebook: array<long> of m codes, index = subspace. See
-  * [[PqAssignKernel]] for the explosion-free argument; posexplode
-  * replays the (id, sub, code) long form downstream consumers expect.
-  */
-case class PqAssignExpr(child: Expression, book: PqAssignBook)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(a: Any): Any =
-    PqAssignKernel.assign(a.asInstanceOf[ArrayData], book)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = ctx.addReferenceObj("pqAssignBook", book,
-      classOf[PqAssignBook].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.PqAssignKernel.assign($a, $b);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PqAssignExpr = copy(child = newChild)
-
-  override def prettyName: String = "pq_assign"
-}
-
-/** Kernel + expression for the 32-bit SimHash over a words array — the
+/** Kernel for the 32-bit SimHash over a words array — the
   * identical math to the SQL form (md5 first 8 hex digits as a 32-bit
   * word hash, per-bit ±1 sums, bit set when positive) in one JVM loop.
   */
@@ -508,24 +355,6 @@ object SimHashKernel {
     }
     out
   }
-}
-
-case class SimHash32Expr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any): Any =
-    SimHashKernel.simhash32(a.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.SimHashKernel.simhash32($a);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SimHash32Expr = copy(child = newChild)
-
-  override def prettyName: String = "simhash32"
 }
 
 /** Kernel for character n-grams of a text column: all length-n codepoint
@@ -565,7 +394,7 @@ object CharNgramKernel {
   }
 }
 
-/** Kernel + expression for the one-pass text profile: word count,
+/** Kernel for the one-pass text profile: word count,
   * all-alpha token count, and non-overlapping marker-word counts, over
   * the canonical normalization (lower, strip edges, collapse whitespace
   * runs). Semantics replicate the Column composition EXACTLY:
@@ -588,7 +417,7 @@ object CharNgramKernel {
   * Why a kernel: the quality/language queries referenced markerCount up
   * to 10× per row, each re-running the two normalize regexps plus a
   * split, and the alpha ratio used filter(_.rlike(...)) — an interpreted
-  * higher-order lambda (the same tax ShinglesExpr/DotScaledExpr already
+  * higher-order lambda (the same tax the shingle/dot kernels already
   * eliminated). This is one normalize+scan per evaluation, inside
   * whole-stage codegen.
   */
@@ -650,83 +479,7 @@ object TextProfileKernel {
   }
 }
 
-/** One-pass text profile as a native expression; output struct
-  * (wc, alpha, counts) with counts aligned to the constructor's marker
-  * list. See [[TextProfileKernel]].
-  */
-case class TextProfileExpr(child: Expression, markers: Seq[String])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("wc",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("alpha",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("counts",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType, containsNull = false),
-      nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (markers.isEmpty) TypeCheckResult.TypeCheckFailure(
-      "text_profile: marker list must be non-empty")
-    else if (markers.exists(m => m.isEmpty || m.exists(_.isWhitespace)))
-      TypeCheckResult.TypeCheckFailure(
-        "text_profile: markers must be non-empty and whitespace-free")
-    else super.checkInputDataTypes()
-
-  @transient private lazy val paddedMarkers: Array[String] =
-    markers.map(m => s" $m ").toArray
-
-  override def nullSafeEval(a: Any): Any =
-    TextProfileKernel.profile(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], paddedMarkers)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("paddedMarkers", paddedMarkers,
-      "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.TextProfileKernel.profile($a, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : TextProfileExpr = copy(child = newChild)
-
-  override def prettyName: String = "text_profile"
-}
-
-/** Char n-grams as a native expression (the Column form —
-  * transform ∘ sequence ∘ substr — is an interpreted higher-order lambda
-  * re-evaluated per generated row; this is one JVM call per document).
-  */
-case class CharNgramsExpr(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.StringType, containsNull = false)
-
-  // n <= 0 would drive CharNgramKernel into negative substring indexes —
-  // fail analysis instead (ADVICE r5).
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (n < 1) TypeCheckResult.TypeCheckFailure(
-      s"char_ngrams: n must be >= 1, got $n")
-    else super.checkInputDataTypes()
-
-  override def nullSafeEval(a: Any): Any =
-    CharNgramKernel.ngrams(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.CharNgramKernel.ngrams($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : CharNgramsExpr = copy(child = newChild)
-
-  override def prettyName: String = "char_ngrams"
-}
-
-/** Kernel + expression for random-hyperplane LSH bucket codes: `tables`
+/** Kernel for random-hyperplane LSH bucket codes: `tables`
   * independent sign-bit codes of `bits` bits each over a float-embedding
   * array. The ±1 plane weights are derived on the fly from a seeded
   * splitmix64 (identical to the retired Column-form planeWeights seq), so
@@ -790,38 +543,7 @@ object LshKernel {
   }
 }
 
-/** LSH codes of a float-embedding column (array<float> → array<long>,
-  * index = table, value = code), backed by [[LshKernel]].
-  */
-case class LshCodesExpr(child: Expression, tables: Int, bits: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  // bits >= 64 silently overflows `1L << b`; tables/bits <= 0 produce
-  // garbage codes — both are analysis errors (ADVICE r5).
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (tables < 1) TypeCheckResult.TypeCheckFailure(
-      s"lsh_codes: tables must be >= 1, got $tables")
-    else if (bits < 1 || bits > 63) TypeCheckResult.TypeCheckFailure(
-      s"lsh_codes: bits must be in [1, 63], got $bits")
-    else super.checkInputDataTypes()
-
-  override def nullSafeEval(a: Any): Any =
-    LshKernel.codes(a.asInstanceOf[ArrayData], tables, bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.LshKernel.codes($a, $tables, $bits);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : LshCodesExpr = copy(child = newChild)
-
-  override def prettyName: String = "lsh_codes"
-}
-
-/** Kernel + expressions for SQ8 scalar quantization: encode an
+/** Kernel for SQ8 scalar quantization: encode an
   * array<float> embedding to ONE BYTE per dimension under broadcast
   * per-dimension (mn, mx) bounds — the true 4×-under-float32 artifact —
   * and decode the byte codes back to the float values an SQ8 index
@@ -891,56 +613,7 @@ object Sq8Kernel {
   }
 }
 
-/** SQ8 encode: (array<float> emb, array<double> mns, array<double> mxs)
-  * → binary codes, backed by [[Sq8Kernel]].
-  */
-case class Sq8EncodeExpr(first: Expression, second: Expression,
-                         third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    Sq8Kernel.encode(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.Sq8Kernel.encode($a, $b, $c);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Sq8EncodeExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def prettyName: String = "sq8_encode"
-}
-
-/** SQ8 decode: (binary codes, array<double> mns, array<double> mxs) →
-  * array<float> dequantized values, backed by [[Sq8Kernel]].
-  */
-case class Sq8DequantExpr(first: Expression, second: Expression,
-                          third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.FloatType, containsNull = false)
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    Sq8Kernel.dequant(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.Sq8Kernel.dequant($a, $b, $c);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Sq8DequantExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def prettyName: String = "sq8_dequant"
-}
-
-/** Kernel + expressions for PACKED-code PQ ADC scoring — the byte-laid-out
+/** Kernel for PACKED-code PQ ADC scoring — the byte-laid-out
   * serving form of the long-form (vec_id, sub, code) ADC in
   * operators/Similarity (reference behavior: api's trade-similarity
   * shortlists; layout follows FAISS's public packed-codes convention):
@@ -951,7 +624,7 @@ case class Sq8DequantExpr(first: Expression, second: Expression,
   * pair in an m-step loop INSIDE whole-stage codegen, replacing the
   * long-form path's m-row join + per-pair aggregation — an m× row
   * reduction before the shuffle. The partial dots/norms are the same
-  * scaled longs [[DotScaledExpr]] produces and integer addition
+  * scaled longs [[DotScaledKernel]] produces and integer addition
   * commutes, so the packed score is bit-identical to the long-form
   * `adcCollapse` sums (parity pinned in SimilaritySpec).
   */
@@ -1051,79 +724,6 @@ object PqAdcKernel {
     }
     out
   }
-}
-
-/** Packed ADC: (binary codes, array<long> pdot LUT, array<long> cn LUT)
-  * → array<long> [adot, rnorm], backed by [[PqAdcKernel]].
-  */
-case class PqAdcExpr(first: Expression, second: Expression,
-                     third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    LongType, containsNull = false)
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    PqAdcKernel.adc(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.PqAdcKernel.adc($a, $b, $c);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): PqAdcExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def prettyName: String = "pq_adc"
-}
-
-/** Fused packed-ADC cosine: (binary codes, array<long> pdot LUT,
-  * array<long> cn LUT, long probe norm) → double, backed by
-  * [[PqAdcKernel.adcCos]] — the allocation-free serving form.
-  */
-case class PqAdcCosExpr(first: Expression, second: Expression,
-                        third: Expression, fourth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    PqAdcKernel.adcCos(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
-      d.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.plans.PqAdcKernel.adcCos($a, $b, $c, $d);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression, newFourth: Expression)
-      : PqAdcCosExpr = copy(first = newFirst, second = newSecond,
-    third = newThird, fourth = newFourth)
-
-  override def prettyName: String = "pq_adc_cos"
-}
-
-/** Byte packing: array<long> dense ids → binary, backed by
-  * [[PqAdcKernel.pack]] (loud range check — no silent aliasing).
-  */
-case class PackBytesExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
-
-  override def nullSafeEval(a: Any): Any =
-    PqAdcKernel.pack(a.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.PqAdcKernel.pack($a);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PackBytesExpr = copy(child = newChild)
-
-  override def prettyName: String = "pack_bytes"
 }
 
 /** Kernel for the CDC boundary scan (Dedup.cdcChunks): one pass over the
@@ -1263,40 +863,6 @@ object CdcKernel {
   }
 }
 
-/** array<int> of CDC chunk end positions — see [[CdcKernel.ends]].
-  * The StringType input contract is enforced where the expression is
-  * built: Dedup.cdcChunks passes a string column and the SQL
-  * registration (GraftExtensions) wraps the argument in
-  * Cast(_, StringType), so a non-castable argument fails Cast's
-  * analysis-time check instead of ClassCastException-ing inside
-  * nullSafeEval on executors, and a numeric one is coerced exactly as
-  * the DataFrame API would coerce it.
-  */
-case class CdcEndsExpr(child: Expression, w: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (w < 1) TypeCheckResult.TypeCheckFailure(
-      s"cdc_ends: w must be >= 1, got $w")
-    else super.checkInputDataTypes()
-
-  override def nullSafeEval(a: Any): Any =
-    CdcKernel.ends(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.CdcKernel.ends($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : CdcEndsExpr = copy(child = newChild)
-
-  override def prettyName: String = "cdc_ends"
-}
-
 /** Fused CDC chunk rows (r16): the whole
   * `starts = [1] ++ (cdc_ends+1)` / `posexplode` / `try_element_at`
   * next-start probe / `md5(substr(t, start, len))` chain of
@@ -1380,44 +946,6 @@ object CdcChunkKernel {
   }
 }
 
-/** array<struct<chunk_ix,start,len,chunk_fp>> of CDC chunks — see
-  * [[CdcChunkKernel.chunkRows]]. Same StringType input contract as
-  * [[CdcEndsExpr]].
-  */
-case class CdcChunkRowsExpr(child: Expression, w: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("chunk_ix", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("start", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("len", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("chunk_fp",
-        org.apache.spark.sql.types.StringType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (w < 1) TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunk_rows: w must be >= 1, got $w")
-    else super.checkInputDataTypes()
-
-  override def nullSafeEval(a: Any): Any =
-    CdcChunkKernel.chunkRows(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.CdcChunkKernel.chunkRows($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : CdcChunkRowsExpr = copy(child = newChild)
-
-  override def prettyName: String = "cdc_chunk_rows"
-}
-
 /** Fused md5-nibble feature bucket (r17): the DSIR/t19 feature hash
   * `conv(substring(md5(f), 1, 4), 16, 10) % nBuckets` as ONE kernel —
   * bit-equivalent by construction (the first 4 hex chars of an MD5 are
@@ -1445,39 +973,6 @@ object Md5BucketKernel {
     val d = md.digest(f.getBytes)
     ((((d(0) & 0xff) << 8) | (d(1) & 0xff)).toLong) % nBuckets
   }
-}
-
-/** `conv(substring(md5(f),1,4),16,10) % nBuckets` fused — see
-  * [[Md5BucketKernel.bucket]].
-  */
-case class Md5BucketExpr(child: Expression, nBuckets: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (nBuckets < 1 || 65536 % nBuckets != 0)
-      TypeCheckResult.TypeCheckFailure(
-        s"md5_bucket: nBuckets must divide 2^16, got $nBuckets")
-    else child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"md5_bucket: expected string, got ${t.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    Md5BucketKernel.bucket(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], nBuckets)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.Md5BucketKernel.bucket($a, $nBuckets);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : Md5BucketExpr = copy(child = newChild)
-
-  override def prettyName: String = "md5_bucket"
 }
 
 /** Kernel for the FUSED DSIR feature extraction (r17 session 2): every
@@ -1626,85 +1121,6 @@ object XxFeatureBucketsKernel {
   }
 }
 
-case class XxFeatureBucketsExpr(child: Expression, nBuckets: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (nBuckets < 1) TypeCheckResult.TypeCheckFailure(
-      s"xx_feature_buckets: nBuckets must be >= 1, got $nBuckets")
-    else child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"xx_feature_buckets: expected string, got ${t.simpleString}")
-    }
-
-  private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf
-    .get.getConf(org.apache.spark.sql.internal.SQLConf
-      .ICU_CASE_MAPPINGS_ENABLED)
-
-  override def nullSafeEval(a: Any): Any =
-    XxFeatureBucketsKernel.buckets(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      nBuckets, useICU)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.XxFeatureBucketsKernel.buckets(" +
-        s"$a, $nBuckets, $useICU);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : XxFeatureBucketsExpr = copy(child = newChild)
-
-  override def prettyName: String = "xx_feature_buckets"
-}
-
-/** The DSIR feature-extraction chain — normalize, tokenize, unigrams ∪
-  * space-joined bigrams, md5-nibble bucket per occurrence — fused into
-  * one pass; see [[FeatureBucketsKernel.buckets]].
-  */
-case class FeatureBucketsExpr(child: Expression, nBuckets: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (nBuckets < 1 || 65536 % nBuckets != 0)
-      TypeCheckResult.TypeCheckFailure(
-        s"feature_buckets: nBuckets must divide 2^16, got $nBuckets")
-    else child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"feature_buckets: expected string, got ${t.simpleString}")
-    }
-
-  // resolved at plan build like NormalizeTextExpr's — baked into
-  // codegen so executors never consult SQLConf
-  private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf
-    .get.getConf(org.apache.spark.sql.internal.SQLConf
-      .ICU_CASE_MAPPINGS_ENABLED)
-
-  override def nullSafeEval(a: Any): Any =
-    FeatureBucketsKernel.buckets(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      nBuckets, useICU)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.FeatureBucketsKernel.buckets(" +
-        s"$a, $nBuckets, $useICU);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : FeatureBucketsExpr = copy(child = newChild)
-
-  override def prettyName: String = "feature_buckets"
-}
-
 /** Unordered-pair combinations of a long array (r17, the d18 self-join
   * replacement): sort a defensive copy, emit every (a, b) with a < b —
   * C(n,2) struct rows. Sorting first makes the output independent of
@@ -1736,41 +1152,6 @@ object PairCombosKernel {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
-
-/** array<struct<a,b>> of unordered id pairs (a < b) from an
-  * array<bigint> — see [[PairCombosKernel.pairs]].
-  */
-case class PairCombosExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("a", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("b", LongType,
-        nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(LongType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"pair_combos: expected array<bigint>, got ${t.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    PairCombosKernel.pairs(a.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.PairCombosKernel.pairs($a);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PairCombosExpr = copy(child = newChild)
-
-  override def prettyName: String = "pair_combos"
 }
 
 /** Kernel for Text.normalize: lowercase, strip ASCII-whitespace edges,
@@ -1847,32 +1228,7 @@ object NormalizeKernel {
   }
 }
 
-case class NormalizeTextExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-
-  // resolved at plan build like Lower's own useICU — baked into codegen
-  // so executors never consult SQLConf
-  private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf
-    .get.getConf(org.apache.spark.sql.internal.SQLConf
-      .ICU_CASE_MAPPINGS_ENABLED)
-
-  override def nullSafeEval(a: Any): Any =
-    NormalizeKernel.normalize(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], useICU)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.NormalizeKernel.normalize($a, $useICU);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : NormalizeTextExpr = copy(child = newChild)
-
-  override def prettyName: String = "normalize_text"
-}
-
-/** Session wiring for the custom expressions: an injectable
+/** Session wiring for the kernels: an injectable
   * [[org.apache.spark.sql.SparkSessionExtensions]] hook for sessions built
   * with `.withExtensions(new GraftExtensions)` (or the
   * `spark.sql.extensions` conf), plus an idempotent runtime registrar for
@@ -1898,7 +1254,8 @@ object GraftExtensions {
     * crash with an unbound-eval/NPE deep inside `eval` — fail with a clean
     * named error instead, mirroring AsOfTableFunction.str (r6 review).
     */
-  private def foldedArg(fn: String, what: String, e: Expression): Any = {
+  private def foldedArg(fn: String, what: String, c: Column): Any = {
+    val e = Bridge.expression(c)
     if (!e.foldable) throw new IllegalArgumentException(
       s"$fn: $what must be a foldable literal, got $e")
     val v = e.eval(null)
@@ -1907,89 +1264,61 @@ object GraftExtensions {
     v
   }
 
-  private def intArg(e: Expression): Int =
-    foldedArg("function", "argument", e) match {
+  private def intArg(c: Column): Int =
+    foldedArg("function", "argument", c) match {
       case n: Number => n.intValue
       case other => throw new IllegalArgumentException(
         s"expected an integer literal, got $other")
     }
 
-  private def markerArg(e: Expression): String =
-    foldedArg("text_profile", "marker", e) match {
+  private def markerArg(c: Column): String =
+    foldedArg("text_profile", "marker", c) match {
       case s: org.apache.spark.unsafe.types.UTF8String => s.toString
       case s: String => s
       case other => throw new IllegalArgumentException(
         s"text_profile: markers must be string literals, got $other")
     }
 
+  /** SQL function `name` built by the same [[Expressions]] wrapper the
+    * DataFrame code calls, so each kernel call is written once.
+    */
+  private def fn(name: String)(build: Seq[Column] => Column)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(Expressions.getClass.getName.stripSuffix("$"), name),
+      (args: Seq[Expression]) =>
+        Bridge.expression(build(args.map(Bridge.column))))
+
   val injections: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("dot_scaled"),
-      new ExpressionInfo(classOf[DotScaledExpr].getName, "dot_scaled"),
-      (args: Seq[Expression]) => DotScaledExpr(args(0), args(1))),
-    (FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      (args: Seq[Expression]) => MinHashSigExpr(args(0), intArg(args(1)))),
-    (FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "shingles"),
-      (args: Seq[Expression]) =>
-        ShinglesExpr(args(0), intArg(args(1)),
-          args.lift(2).forall(a =>
-            foldedArg("shingles", "distinct flag", a) == true))),
-    (FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32Expr].getName, "simhash32"),
-      (args: Seq[Expression]) => SimHash32Expr(args(0))),
-    (FunctionIdentifier("lsh_codes"),
-      new ExpressionInfo(classOf[LshCodesExpr].getName, "lsh_codes"),
-      (args: Seq[Expression]) =>
-        LshCodesExpr(args(0), intArg(args(1)), intArg(args(2)))),
-    (FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[CharNgramsExpr].getName, "char_ngrams"),
-      (args: Seq[Expression]) => CharNgramsExpr(args(0), intArg(args(1)))),
-    (FunctionIdentifier("text_profile"),
-      new ExpressionInfo(classOf[TextProfileExpr].getName, "text_profile"),
-      (args: Seq[Expression]) => TextProfileExpr(args.head,
-        args.tail.map(markerArg))),
-    (FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(classOf[PqAdcExpr].getName, "pq_adc"),
-      (args: Seq[Expression]) => PqAdcExpr(args(0), args(1), args(2))),
-    (FunctionIdentifier("pq_adc_cos"),
-      new ExpressionInfo(classOf[PqAdcCosExpr].getName, "pq_adc_cos"),
-      (args: Seq[Expression]) =>
-        PqAdcCosExpr(args(0), args(1), args(2), args(3))),
-    (FunctionIdentifier("pack_bytes"),
-      new ExpressionInfo(classOf[PackBytesExpr].getName, "pack_bytes"),
-      (args: Seq[Expression]) => PackBytesExpr(args(0))),
-    // heavy_hitters/cdc_ends: the SQL arg is cast to the kernel's input
-    // type exactly like the Column wrappers cast it (r14 advice) — the
-    // Cast carries the type contract, so a non-castable argument fails
-    // at analysis instead of ClassCastException-ing on executors
+    fn("dot_scaled")(a => Expressions.dotScaled(a(0), a(1))),
+    fn("minhash_sig")(a => Expressions.minhashSig(a(0), intArg(a(1)))),
+    fn("shingles")(a =>
+      Expressions.shingles(a(0), intArg(a(1)), a.lift(2).forall(d =>
+        foldedArg("shingles", "distinct flag", d) == true))),
+    fn("simhash32")(a => Expressions.simhash32(a(0))),
+    fn("lsh_codes")(a =>
+      Expressions.lshCodes(a(0), intArg(a(1)), intArg(a(2)))),
+    fn("char_ngrams")(a => Expressions.charNgrams(a(0), intArg(a(1)))),
+    fn("text_profile")(a =>
+      Expressions.textProfile(a.head, a.tail.map(markerArg))),
+    fn("pq_adc")(a => Expressions.pqAdc(a(0), a(1), a(2))),
+    fn("pq_adc_cos")(a => Expressions.pqAdcCos(a(0), a(1), a(2), a(3))),
+    fn("pack_bytes")(a => Expressions.packBytes(a(0))),
+    // the SQL arg is cast to long exactly like the Column wrapper casts it
+    // (r14 advice) — the Cast carries the type contract, so a
+    // non-castable argument fails at analysis instead of
+    // ClassCastException-ing on executors
     (FunctionIdentifier("heavy_hitters"),
       new ExpressionInfo(classOf[HeavyHittersAgg].getName, "heavy_hitters"),
       (args: Seq[Expression]) =>
         HeavyHittersAgg(
           org.apache.spark.sql.catalyst.expressions.Cast(args(0),
             org.apache.spark.sql.types.LongType),
-          intArg(args(1)))),
-    (FunctionIdentifier("cdc_ends"),
-      new ExpressionInfo(classOf[CdcEndsExpr].getName, "cdc_ends"),
-      (args: Seq[Expression]) => CdcEndsExpr(
-        org.apache.spark.sql.catalyst.expressions.Cast(args(0),
-          org.apache.spark.sql.types.StringType),
-        intArg(args(1)))),
-    (FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeTextExpr].getName,
-        "normalize_text"),
-      (args: Seq[Expression]) => NormalizeTextExpr(
-        org.apache.spark.sql.catalyst.expressions.Cast(args(0),
-          org.apache.spark.sql.types.StringType))),
-    (FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashesExpr].getName,
-        "shingle_hashes"),
-      (args: Seq[Expression]) => ShingleHashesExpr(
-        org.apache.spark.sql.catalyst.expressions.Cast(args(0),
-          org.apache.spark.sql.types.StringType),
-        intArg(args(1)))))
+          intArg(Bridge.column(args(1))))),
+    fn("cdc_ends")(a => Expressions.cdcEnds(a(0), intArg(a(1)))),
+    fn("normalize_text")(a => Expressions.normalizeText(a(0))),
+    fn("shingle_hashes")(a => Expressions.shingleHashes(a(0), intArg(a(1)))))
 
   /** Register into an already-built session (idempotent). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
@@ -1999,61 +1328,118 @@ object GraftExtensions {
     }
 }
 
+/** Column wrappers for the kernels above. Each is ONE Spark
+  * `StaticInvoke` of the kernel's static method: whole-stage codegen
+  * emits `graft.plans.XKernel.fn(...)` and interpreted evaluation calls
+  * the same method by reflection, so there is one call per kernel and no
+  * hand-written eval/codegen pair to drift apart (CodegenParitySpec pins
+  * the two evaluation modes equal). Null in any column argument gives
+  * null out. Column arguments are declared with their input types, so
+  * the analyzer casts a coercible argument and rejects the rest; scalar
+  * parameters are checked here, when the column is built, and ride along
+  * as literals.
+  */
 object Expressions {
-  /** Column wrapper for [[DotScaledExpr]] (inputs: array<float> ×2). */
+  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+  import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType,
+    FloatType, IntegerType, StringType, StructField, StructType}
+
+  private val FloatArray = ArrayType(FloatType)
+  private val LongArray = ArrayType(LongType)
+  private val DoubleArray = ArrayType(DoubleType)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Strings = ArrayType(StringType, containsNull = false)
+  private def field(name: String, t: DataType) =
+    StructField(name, t, nullable = false)
+
+  /** `kernel.fn(cols..., consts...)`: Int/Boolean constants become typed
+    * literals, any other object an ObjectType literal.
+    */
+  private def invoke(kernel: AnyRef, fn: String, out: DataType,
+                     cols: (Column, DataType)*)(consts: Any*): Column = {
+    val lits = consts.map {
+      case v @ (_: Int | _: Boolean) => Literal(v)
+      case o => Literal.fromObject(o)
+    }
+    Bridge.column(StaticInvoke(kernel.getClass, out, fn,
+      cols.map(c => Bridge.expression(c._1)) ++ lits,
+      cols.map(_._2) ++ lits.map(_.dataType),
+      propagateNull = true, returnNullable = false))
+  }
+
+  /** The ICU case-mapping flag `lower()` evaluates with, resolved when the
+    * column is built so executors never consult SQLConf.
+    */
+  private def useICU: Boolean = org.apache.spark.sql.internal.SQLConf.get
+    .getConf(org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  /** [[DotScaledKernel]] (inputs: array<float> ×2). */
   def dotScaled(a: Column, b: Column): Column =
-    Bridge.column(DotScaledExpr(Bridge.expression(a), Bridge.expression(b)))
+    invoke(DotScaledKernel, "dot", LongType, a -> FloatArray, b -> FloatArray)()
 
-  /** Column wrapper for [[MinHashSigExpr]]. */
-  def minhashSig(shingles: Column, k: Int): Column =
-    Bridge.column(MinHashSigExpr(Bridge.expression(shingles), k))
+  /** [[MinHashKernel]]: array<string> shingles → array<long> of k minima. */
+  def minhashSig(shingles: Column, k: Int): Column = {
+    // scalar args arrive unvalidated from the SQL registration — reject
+    // when the column is built, not with an ArrayIndexOutOfBounds mid-job
+    require(k >= 1, s"minhash_sig: k must be >= 1, got $k")
+    invoke(MinHashKernel, "sig", Longs, shingles -> ArrayType(StringType))(k)
+  }
 
-  /** Column wrapper for [[ShinglesExpr]]. */
-  def shingles(text: Column, n: Int, distinct: Boolean): Column =
-    Bridge.column(ShinglesExpr(Bridge.expression(text), n, distinct))
+  /** [[ShingleKernel]]: string → array<string> of word n-grams. */
+  def shingles(text: Column, n: Int, distinct: Boolean): Column = {
+    require(n >= 1, s"shingles: n must be >= 1, got $n")
+    invoke(ShingleKernel, "shingles", Strings, text -> StringType)(n,
+      distinct)
+  }
 
-  /** Column wrapper for [[SimHash32Expr]] (input: array<string> words). */
+  /** [[SimHashKernel]] (input: array<string> words). */
   def simhash32(words: Column): Column =
-    Bridge.column(SimHash32Expr(Bridge.expression(words)))
+    invoke(SimHashKernel, "simhash32", LongType,
+      words -> ArrayType(StringType))()
 
-  /** Column wrapper for [[LshCodesExpr]] (input: array<float>). */
-  def lshCodes(emb: Column, tables: Int, bits: Int): Column =
-    Bridge.column(LshCodesExpr(Bridge.expression(emb), tables, bits))
+  /** [[LshKernel]]: array<float> → array<long>, index = table. */
+  def lshCodes(emb: Column, tables: Int, bits: Int): Column = {
+    // bits >= 64 silently overflows `1L << b`; tables/bits <= 0 produce
+    // garbage codes (ADVICE r5)
+    require(tables >= 1, s"lsh_codes: tables must be >= 1, got $tables")
+    require(bits >= 1 && bits <= 63,
+      s"lsh_codes: bits must be in [1, 63], got $bits")
+    invoke(LshKernel, "codes", Longs, emb -> FloatArray)(tables, bits)
+  }
 
-  /** Column wrapper for [[Sq8EncodeExpr]] (array<float>, array<double>,
-    * array<double> → binary — one byte per dimension).
+  /** [[Sq8Kernel.encode]] (array<float>, array<double>, array<double> →
+    * binary — one byte per dimension).
     */
   def sq8Encode(emb: Column, mns: Column, mxs: Column): Column =
-    Bridge.column(Sq8EncodeExpr(Bridge.expression(emb),
-      Bridge.expression(mns), Bridge.expression(mxs)))
+    invoke(Sq8Kernel, "encode", BinaryType, emb -> FloatArray,
+      mns -> DoubleArray, mxs -> DoubleArray)()
 
-  /** Column wrapper for [[Sq8DequantExpr]] (binary, array<double>,
-    * array<double> → array<float>).
+  /** [[Sq8Kernel.dequant]] (binary, array<double>, array<double> →
+    * array<float>).
     */
   def sq8Dequant(codes: Column, mns: Column, mxs: Column): Column =
-    Bridge.column(Sq8DequantExpr(Bridge.expression(codes),
-      Bridge.expression(mns), Bridge.expression(mxs)))
+    invoke(Sq8Kernel, "dequant", ArrayType(FloatType, containsNull = false),
+      codes -> BinaryType, mns -> DoubleArray, mxs -> DoubleArray)()
 
-  /** Column wrapper for [[PqAdcExpr]] (binary packed codes, array<long>
-    * pdot LUT, array<long> cn LUT → array<long> [adot, rnorm]).
+  /** [[PqAdcKernel.adc]] (binary packed codes, array<long> pdot LUT,
+    * array<long> cn LUT → array<long> [adot, rnorm]).
     */
   def pqAdc(codes: Column, pdot: Column, cn: Column): Column =
-    Bridge.column(PqAdcExpr(Bridge.expression(codes),
-      Bridge.expression(pdot), Bridge.expression(cn)))
+    invoke(PqAdcKernel, "adc", Longs, codes -> BinaryType,
+      pdot -> LongArray, cn -> LongArray)()
 
-  /** Column wrapper for [[PqAdcCosExpr]] (binary packed codes,
-    * array<long> pdot LUT, array<long> cn LUT, long probe norm →
-    * double fused ADC cosine).
+  /** [[PqAdcKernel.adcCos]] (binary packed codes, array<long> pdot LUT,
+    * array<long> cn LUT, long probe norm → double fused ADC cosine).
     */
   def pqAdcCos(codes: Column, pdot: Column, cn: Column,
                pn: Column): Column =
-    Bridge.column(PqAdcCosExpr(Bridge.expression(codes),
-      Bridge.expression(pdot), Bridge.expression(cn),
-      Bridge.expression(pn)))
+    invoke(PqAdcKernel, "adcCos", DoubleType, codes -> BinaryType,
+      pdot -> LongArray, cn -> LongArray, pn -> LongType)()
 
-  /** Column wrapper for [[PackBytesExpr]] (array<long> → binary). */
+  /** [[PqAdcKernel.pack]] (array<long> → binary; loud range check). */
   def packBytes(dense: Column): Column =
-    Bridge.column(PackBytesExpr(Bridge.expression(dense)))
+    invoke(PqAdcKernel, "pack", BinaryType, dense -> LongArray)()
 
   /** Bloom prune: the `big` rows whose `bigKey` might be among the
     * first column of `keys`. The filter is Spark's own
@@ -2068,8 +1454,7 @@ object Expressions {
   def bloomPrune(big: org.apache.spark.sql.DataFrame, bigKey: Column,
                  keys: org.apache.spark.sql.DataFrame, items: Long,
                  bits: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate
       .BloomFilterAggregate
     import org.apache.spark.sql.functions.{col, xxhash64}
@@ -2081,67 +1466,114 @@ object Expressions {
       Bridge.expression(bloom), Bridge.expression(xxhash64(bigKey)))))
   }
 
-  /** Column wrapper for [[CharNgramsExpr]] (input: string). */
-  def charNgrams(text: Column, n: Int): Column =
-    Bridge.column(CharNgramsExpr(Bridge.expression(text), n))
+  /** [[CharNgramKernel]]: string → array<string> of codepoint n-grams. */
+  def charNgrams(text: Column, n: Int): Column = {
+    // n <= 0 would drive the kernel into negative substring indexes
+    // (ADVICE r5)
+    require(n >= 1, s"char_ngrams: n must be >= 1, got $n")
+    invoke(CharNgramKernel, "ngrams", Strings, text -> StringType)(n)
+  }
 
-  /** Column wrapper for [[CdcEndsExpr]] (input: string; output
-    * array<int> of chunk end positions).
-    */
-  def cdcEnds(text: Column, w: Int): Column =
-    Bridge.column(CdcEndsExpr(Bridge.expression(text), w))
+  /** [[CdcKernel.ends]]: string → array<int> of chunk end positions. */
+  def cdcEnds(text: Column, w: Int): Column = {
+    require(w >= 1, s"cdc_ends: w must be >= 1, got $w")
+    invoke(CdcKernel, "ends", ArrayType(IntegerType, containsNull = false),
+      text -> StringType)(w)
+  }
 
-  /** Column wrapper for [[CdcChunkRowsExpr]] (string → array<struct<
-    * chunk_ix,start,len,chunk_fp>> of CDC chunks).
+  /** [[CdcChunkKernel.chunkRows]]: string → array<struct<chunk_ix, start,
+    * len, chunk_fp>> of CDC chunks.
     */
-  /** Column wrapper for [[PairCombosExpr]] (input: array<bigint>). */
+  def cdcChunkRows(text: Column, w: Int): Column = {
+    require(w >= 1, s"cdc_chunk_rows: w must be >= 1, got $w")
+    invoke(CdcChunkKernel, "chunkRows", ArrayType(StructType(Seq(
+        field("chunk_ix", LongType), field("start", LongType),
+        field("len", LongType), field("chunk_fp", StringType))),
+      containsNull = false), text -> StringType)(w)
+  }
+
+  /** [[PairCombosKernel]]: array<bigint> → array<struct<a, b>> of
+    * unordered id pairs (a < b).
+    */
   def pairCombos(ids: Column): Column =
-    Bridge.column(PairCombosExpr(Bridge.expression(ids)))
+    invoke(PairCombosKernel, "pairs", ArrayType(StructType(Seq(
+        field("a", LongType), field("b", LongType))), containsNull = false),
+      ids -> LongArray)()
 
-  /** Column wrapper for [[Md5BucketExpr]] (input: string). */
-  def md5Bucket(f: Column, nBuckets: Int): Column =
-    Bridge.column(Md5BucketExpr(Bridge.expression(f), nBuckets))
-
-  /** Column wrapper for [[FeatureBucketsExpr]] (string → array<long> of
-    * md5-nibble buckets of every unigram + bigram).
+  /** [[Md5BucketKernel]]: `conv(substring(md5(f),1,4),16,10) % nBuckets`
+    * of a string.
     */
-  def featureBuckets(text: Column, nBuckets: Int): Column =
-    Bridge.column(FeatureBucketsExpr(Bridge.expression(text), nBuckets))
+  def md5Bucket(f: Column, nBuckets: Int): Column = {
+    require(nBuckets >= 1 && 65536 % nBuckets == 0,
+      s"md5_bucket: nBuckets must divide 2^16, got $nBuckets")
+    invoke(Md5BucketKernel, "bucket", LongType, f -> StringType)(nBuckets)
+  }
 
-  /** Column wrapper for [[XxFeatureBucketsExpr]] (string → array<long>
-    * of pmod(xxhash64(feature), n) buckets of every unigram + bigram).
+  /** [[FeatureBucketsKernel]]: string → array<long> of md5-nibble buckets
+    * of every unigram + bigram.
     */
-  def xxFeatureBuckets(text: Column, nBuckets: Int): Column =
-    Bridge.column(XxFeatureBucketsExpr(Bridge.expression(text), nBuckets))
+  def featureBuckets(text: Column, nBuckets: Int): Column = {
+    require(nBuckets >= 1 && 65536 % nBuckets == 0,
+      s"feature_buckets: nBuckets must divide 2^16, got $nBuckets")
+    invoke(FeatureBucketsKernel, "buckets", Longs, text -> StringType)(
+      nBuckets, useICU)
+  }
 
-  def cdcChunkRows(text: Column, w: Int): Column =
-    Bridge.column(CdcChunkRowsExpr(Bridge.expression(text), w))
+  /** [[XxFeatureBucketsKernel]]: string → array<long> of
+    * pmod(xxhash64(feature), n) buckets of every unigram + bigram.
+    */
+  def xxFeatureBuckets(text: Column, nBuckets: Int): Column = {
+    require(nBuckets >= 1,
+      s"xx_feature_buckets: nBuckets must be >= 1, got $nBuckets")
+    invoke(XxFeatureBucketsKernel, "buckets", Longs, text -> StringType)(
+      nBuckets, useICU)
+  }
 
-  /** Column wrapper for [[NormalizeTextExpr]] (string → string). */
+  /** [[NormalizeKernel]] (string → string). */
   def normalizeText(text: Column): Column =
-    Bridge.column(NormalizeTextExpr(Bridge.expression(text)))
+    invoke(NormalizeKernel, "normalize", StringType, text -> StringType)(
+      useICU)
 
-  /** Column wrapper for [[ShingleHashesExpr]] (string → array<long> of
-    * per-position gram xxhash64s).
+  /** [[ShingleHashKernel]]: string → array<long> of per-position gram
+    * xxhash64s.
     */
-  def shingleHashes(text: Column, n: Int): Column =
-    Bridge.column(ShingleHashesExpr(Bridge.expression(text), n))
+  def shingleHashes(text: Column, n: Int): Column = shingleHashes(text, n, 1)
 
   /** Strided form: hash only every `stride`-th window (window starts 0,
     * stride, 2·stride, …) — the non-overlapping-chunk shape.
     */
-  def shingleHashes(text: Column, n: Int, stride: Int): Column =
-    Bridge.column(ShingleHashesExpr(Bridge.expression(text), n, stride))
+  def shingleHashes(text: Column, n: Int, stride: Int): Column = {
+    require(n >= 1 && stride >= 1, "shingle_hashes: n and stride must be " +
+      s">= 1, got n=$n stride=$stride")
+    invoke(ShingleHashKernel, "hashes", Longs, text -> StringType)(n,
+      stride, useICU)
+  }
 
-  /** Column wrapper for [[PqAssignExpr]] (embedding → array<long> of m
-    * PQ codes, index = subspace).
+  /** [[PqAssignKernel]]: embedding → array<long> of m PQ codes, index =
+    * subspace, against the driver-collected `book`.
     */
   def pqAssignCodes(embedding: Column, book: PqAssignBook): Column =
-    Bridge.column(PqAssignExpr(Bridge.expression(embedding), book))
+    invoke(PqAssignKernel, "assign", Longs, embedding -> FloatArray)(book)
 
-  /** Column wrapper for [[TextProfileExpr]] (input: string; output struct
-    * (wc, alpha, counts) with counts aligned to `markers`).
+  // one padded array per marker list: a literal array compares by
+  // reference, so sharing it keeps repeated calls over the same markers
+  // (`text_profile(t, 'a').wc, text_profile(t, 'a').alpha` in SQL)
+  // semantically equal, and subexpression elimination still runs the
+  // profile once per row
+  private val paddedMarkers =
+    scala.collection.concurrent.TrieMap.empty[Seq[String], Array[String]]
+
+  /** [[TextProfileKernel]]: string → struct (wc, alpha, counts) with
+    * counts aligned to `markers`.
     */
-  def textProfile(text: Column, markers: Seq[String]): Column =
-    Bridge.column(TextProfileExpr(Bridge.expression(text), markers))
+  def textProfile(text: Column, markers: Seq[String]): Column = {
+    require(markers.nonEmpty, "text_profile: marker list must be non-empty")
+    require(!markers.exists(m => m.isEmpty || m.exists(_.isWhitespace)),
+      "text_profile: markers must be non-empty and whitespace-free")
+    invoke(TextProfileKernel, "profile", StructType(Seq(
+        field("wc", IntegerType), field("alpha", IntegerType),
+        field("counts", ArrayType(IntegerType, containsNull = false)))),
+      text -> StringType)(
+      paddedMarkers.getOrElseUpdate(markers, markers.map(m => s" $m ").toArray))
+  }
 }

@@ -20,7 +20,7 @@ object PipelineText {
     // T6: repetition ratio — Gopher-style boilerplate signal: the
     // fraction of word-trigram occurrences that are repeats of an
     // earlier trigram in the same doc. Both shingle forms come from the
-    // codegen'd kernel (ShinglesExpr with/without distinct).
+    // codegen'd ShingleKernel (with/without distinct).
     "t6_repetition" -> { (s, d) =>
       val all = graft.plans.Expressions.shingles(col("text"), 3, distinct = false)
       val uniq = graft.plans.Expressions.shingles(col("text"), 3, distinct = true)
@@ -217,7 +217,7 @@ object PipelineText {
     // T9s: character-trigram frequency profile per language — the feature
     // input a statistical language identifier trains on (top-5 trigrams
     // per lang with a deterministic tiebreak). Trigram generation is the
-    // codegen'd char_ngrams kernel (plans/CharNgramsExpr): the Column form
+    // codegen'd char_ngrams kernel (plans.CharNgramKernel): the Column form
     // (transform ∘ sequence ∘ substr) is an interpreted lambda, and
     // explode_outer instead of explode avoids the inferred size(...)>0
     // filter that would re-evaluate the normalize+ngram chain per row.

@@ -211,7 +211,7 @@ class PlanLintSpec extends AnyFunSuite {
     assert(!planStr.contains("Join"),
       s"d18's capped path must not join (aggregate-and-explode form):\n" +
         planStr)
-    assert(planStr.contains("pair_combos"),
+    assert(planStr.contains("PairCombosKernel.pairs"),
       s"pair_combos kernel missing from d18's final plan:\n$planStr")
     val fpExchanges = planStr.split("\n")
       .count(l => l.contains("Exchange hashpartitioning(chunk_fp"))
@@ -399,6 +399,21 @@ class PlanLintSpec extends AnyFunSuite {
           s"$rel:${i + 1}: ${line.trim}"
       }
     }
+    assert(found.isEmpty, "\n" + found.mkString("\n"))
+  }
+
+  test("kernel expressions carry no hand-written codegen") {
+    // Every kernel is one StaticInvoke of its static method (codegen and
+    // interpreted evaluation share that one call); a class overriding
+    // doGenCode here would reintroduce a second, hand-written copy of a
+    // kernel call that can drift from its eval path.
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(
+      "src/main/scala/graft/plans/Expressions.scala")
+    assert(java.nio.file.Files.isRegularFile(src), src.toAbsolutePath)
+    val found = java.nio.file.Files.readAllLines(src).asScala.zipWithIndex
+      .collect { case (line, i) if line.contains("def doGenCode") =>
+        s"Expressions.scala:${i + 1}: ${line.trim}" }
     assert(found.isEmpty, "\n" + found.mkString("\n"))
   }
 
